@@ -81,9 +81,8 @@ def _run_to_table(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # tmpfs checkpoint: per-batch state commits + WAL on the bounded
-    # replay are fixed overhead with no post-stop consumer (sources.py:
-    # temp_checkpoint_dir)
+    # throwaway checkpoint: the bounded replay has no post-stop consumer
+    # (sources.py: temp_checkpoint_dir)
     ckpt = sources.temp_checkpoint_dir(prefix)
     try:
         q = (

@@ -64,6 +64,21 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
+        # Checkpoint I/O without child processes.  Without libhadoop the
+        # default FileContext-based manager forks `chmod` for every
+        # create (explicit permission) and `readlink` for every rename
+        # (getFileLinkStatus on source and destination, .crc siblings
+        # included): ~190 forks per micro-batch across state deltas,
+        # offsets, commits and the source log.  The FileSystem-based
+        # manager renames with an atomic POSIX rename (atomic on HDFS
+        # too) and still writes and verifies Hadoop .crc files through
+        # ChecksumFileSystem; ~40 `chmod` per batch remain.  Object-store
+        # checkpoints need a manager of their own either way.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -31,21 +31,18 @@ def temp_checkpoint_dir(prefix: str = "ckpt_") -> str:
     """Checkpoint location for BOUNDED replay queries feeding an
     in-memory sink (the test/bench fixtures).  Those checkpoints have no
     consumer after ``q.stop()`` — the query handle and the memory table
-    die with the session — so durability buys nothing and the fastest
-    local medium wins: per-micro-batch state-store commits + offset/WAL
-    writes are pure fixed overhead on the replay (measured ~1.2 s of
-    state-store commit time per micro-batch on /tmp-on-disk vs
-    milliseconds on tmpfs for the stream-stream coGroup).
+    die with the session — so the caller removes the directory after the
+    drain.  The medium does not matter: with the session's fork-free
+    checkpoint manager (``session.get_spark``) these replays run as fast
+    on disk as on tmpfs.
 
-    ``SPARK_GRAFT_STREAM_CKPT`` overrides the base directory — on a real
-    cluster point it at durable storage (or leave the production sink
-    paths, which all take caller-provided checkpoint locations, e.g.
-    ``streaming/sinks.py``/``retract.py``, untouched by this helper).
+    ``SPARK_GRAFT_STREAM_CKPT`` overrides the base directory (default:
+    the system temp dir) — on a real cluster point it at durable storage
+    (or leave the production sink paths, which all take caller-provided
+    checkpoint locations, e.g. ``streaming/sinks.py``/``retract.py``,
+    untouched by this helper).
     """
-    base = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
-    if base is None and os.path.isdir("/dev/shm"):
-        base = "/dev/shm"
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    return tempfile.mkdtemp(prefix=prefix, dir=os.environ.get("SPARK_GRAFT_STREAM_CKPT"))
 
 
 def run_bounded_to_memory(

@@ -7,6 +7,8 @@ import datetime as dt
 import shutil
 
 import pandas as pd
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from flink_1_8_sourcecode_spark.catalog import table
@@ -269,3 +271,77 @@ def test_temporal_join_stream_state_survives_restart(spark, tmp_path):
 
     got = spark.read.parquet(out).filter(F.col("k") == 1).toPandas()
     assert len(got) == 1 and got.iloc[0].payload == 7.0
+
+
+def test_session_uses_fork_free_checkpoint_manager(spark, tmp_path):
+    """Checkpoint files go through the FileSystem-based manager: its
+    renames and creates need no `readlink`/`chmod` child process per
+    file, unlike the FileContext-based default without libhadoop."""
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path))
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        path, hconf
+    )
+    assert mgr.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_corrupt_offsets_fail_the_restart(spark, tmp_path):
+    """Checkpoint integrity under the FileSystem-based manager: offsets,
+    commits and state deltas keep their Hadoop `.crc` siblings, and a
+    restart over an offsets file with one flipped byte fails instead of
+    resuming from the corrupt offsets (the FileContext-based manager
+    resumed from such a file and re-ran an already committed batch)."""
+    src_dir = str(tmp_path / "src")
+    ckpt = tmp_path / "ckpt"
+    base = dt.datetime(2024, 1, 1)
+    schema = "k long, ts timestamp, v double"
+    for f in range(2):
+        rows = [(i % 5, base + dt.timedelta(seconds=10 * f + i), 1.0) for i in range(10)]
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src_dir}/f={f}")
+
+    def start():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(src_dir)
+        )
+        return (
+            stream.groupBy("k").agg(F.sum("v").alias("s"))
+            .writeStream.format("memory").queryName("t_crc")
+            .outputMode("complete")
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    offsets = sorted(int(p.name) for p in (ckpt / "offsets").iterdir() if p.name.isdigit())
+    commits = sorted(int(p.name) for p in (ckpt / "commits").iterdir() if p.name.isdigit())
+    assert offsets == commits == [0, 1]
+    assert (ckpt / "offsets" / ".1.crc").is_file()
+    assert (ckpt / "commits" / ".1.crc").is_file()
+    deltas = list((ckpt / "state").rglob("*.delta"))
+    assert deltas
+    assert all((d.parent / f".{d.name}.crc").is_file() for d in deltas)
+
+    latest = ckpt / "offsets" / "1"
+    data = bytearray(latest.read_bytes())
+    pos = data.rindex(b"}") - 1  # inside the source offset, same length
+    data[pos] ^= 0x01
+    latest.write_bytes(bytes(data))
+
+    with pytest.raises(StreamingQueryException, match="(?i)checksum"):
+        q = start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()

@@ -3,7 +3,9 @@
 
 Monkey-patches DataStreamWriter.start to capture every StreamingQuery the
 query function launches, then dumps recentProgress durationMs /
-stateOperators metrics after the run.
+stateOperators metrics (commit, all-updates and all-removals time) after
+the run.  ``--cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else the host's
+core count, the same ``local[N]`` the tests and the benchmark use.
 
 Usage: python tools/profile_streaming.py <query_name> [--sf DIR] [--cpus N]
 """
@@ -25,7 +27,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("name")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument(
+        "--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    )
     args = ap.parse_args()
 
     os.environ["SPARK_GRAFT_CPUS"] = args.cpus
@@ -67,7 +71,9 @@ def main() -> None:
             rows = p.get("numInputRows")
             state = p.get("stateOperators", [])
             st = "; ".join(
-                f"op{idx}: commit={so.get('commitTimeMs')}ms rows={so.get('numRowsTotal')}"
+                f"op{idx}: commit={so.get('commitTimeMs')}ms "
+                f"updates={so.get('allUpdatesTimeMs')}ms "
+                f"removals={so.get('allRemovalsTimeMs')}ms rows={so.get('numRowsTotal')}"
                 for idx, so in enumerate(state)
             )
             print(
