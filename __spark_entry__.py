@@ -4,11 +4,12 @@ entry(spark)  -> flagship TPC-H Q3 on sf0.001.
 queries()     -> every declared query from SURVEY.md §2 (name -> callable).
 oracle_sql()  -> matching DuckDB SQL per query (omitted => rows-only check).
 
-Every callable ships the engine package to Spark's Python workers via
-addPyFile on first use: the driver process may import this module from an
-arbitrary cwd, and workers do not inherit the driver's sys.path, so
-pickled-by-reference functions (applyInPandas/pandas_udf bodies) need the
-package on the worker side too.
+Every callable applies the engine's runtime SQL confs to the session it
+is handed (``session.apply_runtime_conf``) and ships the engine package to
+Spark's Python workers via addPyFile on first use: the driver process may
+import this module from an arbitrary cwd, and workers do not inherit the
+driver's sys.path, so pickled-by-reference functions (applyInPandas/
+pandas_udf bodies) need the package on the worker side too.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
 from flink_1_8_sourcecode_spark.queries import load_all  # noqa: E402
+from flink_1_8_sourcecode_spark.session import apply_runtime_conf  # noqa: E402
 
 _REGISTRY = load_all()
 _PKG = "flink_1_8_sourcecode_spark"
@@ -50,6 +52,10 @@ def _package_zip() -> str:
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
+    # the driver builds its own session, so the engine's runtime confs are
+    # applied on every call (a conf set can be undone between calls); the
+    # static codegen cache bound cannot reach a session that already exists
+    apply_runtime_conf(spark)
     key = id(spark.sparkContext)
     if key not in _SHIPPED:
         spark.sparkContext.addPyFile(_package_zip())

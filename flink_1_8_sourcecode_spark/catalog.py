@@ -89,21 +89,21 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     parallelism the layout would provide anyway.  Catalyst pushes
     filters and column pruning THROUGH Repartition, so PushedFilters /
     ReadSchema at the scan are unchanged; only survivors shuffle."""
+    key = _SPREAD_KEYS.get(path.rsplit("/", 1)[-1].split(".")[0])
+    if key is None:
+        # keyed-or-raise, checked before the layout gate so the contract
+        # does not depend on the core count: a keyless repartition(n)
+        # here would be exactly the round-robin local-sort / SPARK-38388
+        # retry-duplication hazard this module's docstring warns about.
+        # Every spread call site must name its table in _SPREAD_KEYS.
+        raise KeyError(
+            f"spread=True on table {path!r} with no entry in "
+            "_SPREAD_KEYS — add a deterministic distribution key "
+            "instead of falling back to round-robin repartition"
+        )
     target = spark.sparkContext.defaultParallelism
     units = _scan_units(path)
     if units is not None and units < target:
-        key = _SPREAD_KEYS.get(path.rsplit("/", 1)[-1].split(".")[0])
-        if key is None:
-            # keyed-or-raise (r17, VERDICT item 8): a keyless
-            # repartition(n) here would be exactly the round-robin
-            # local-sort / SPARK-38388 retry-duplication hazard this
-            # module's docstring warns about.  Every spread call site
-            # must name its table in _SPREAD_KEYS.
-            raise KeyError(
-                f"spread=True on table {path!r} with no entry in "
-                "_SPREAD_KEYS — add a deterministic distribution key "
-                "instead of falling back to round-robin repartition"
-            )
         from pyspark.sql import functions as F
 
         return df.repartition(target, F.col(key))
