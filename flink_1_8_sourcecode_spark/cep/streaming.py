@@ -23,9 +23,9 @@ same bound as Flink's NFA state.  The buffer is typed columnar (no
 pickle), kept sorted with one stable pandas sort per batch, and resume
 trims are searchsorted on the time column; rows materialize as dicts
 only for the NFA scan itself (the matcher is per-row by nature — it IS
-the NFA).  With ``key_buckets`` the stateful shuffle rides on Flink-
-style key groups (hash(key) % B) and one invocation serves all of a
-bucket's keys.
+the NFA).  The stateful shuffle rides on Flink-style key groups
+(``arrow_state.key_group``) and one invocation serves all of a group's
+keys.
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_1_8_sourcecode_spark.cep.matcher import _find_matches
@@ -51,7 +50,6 @@ def match_pattern_stream(
     select_cols: list[str],
     watermark_delay: str,
     tiebreak: str | None = None,
-    key_buckets: int | None = None,
     emit_timeouts: bool = False,
     match_reducer=None,
     reduced_schema: str | None = None,
@@ -67,13 +65,11 @@ def match_pattern_stream(
     stage-prefix with ``timed_out=true`` — the stable-start cutoff makes
     the timeout decision final by construction.
 
-    ``key_buckets`` shards keys into Flink-style key groups
-    (KeyGroupRangeAssignment.java — see streaming/triggers.py): the
-    stateful shuffle rides on ``hash(key) % key_buckets`` and one
-    invocation per bucket per micro-batch runs the NFA for all of the
-    bucket's keys, amortizing the per-invocation JVM<->Python protocol
-    cost.  Results are identical; works for any key type (key values
-    live in the Arrow buffers, not packed numerics).
+    Keys are sharded into Flink-style key groups
+    (``arrow_state.key_group``, KeyGroupRangeAssignment.java): one
+    invocation per group per micro-batch runs the NFA for all of the
+    group's keys, amortizing the per-invocation JVM<->Python protocol
+    cost.
 
     ``match_reducer`` folds each completed match into ONE output row
     before it leaves Python (streaming MATCH_RECOGNIZE's ONE ROW PER
@@ -135,7 +131,7 @@ def match_pattern_stream(
 
     meta_cols = [key, "__next_id", "__resume"]
 
-    def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
+    def fn(_kg, batches: Iterator[pd.DataFrame], state: GroupState):
         # buf = typed row frame with a __t seconds column, kept sorted by
         # (key, __t, tiebreak); per-key (next_id, resume) cursors live in
         # an Arrow meta frame — state rides as Arrow IPC, never pickle
@@ -247,7 +243,7 @@ def match_pattern_stream(
         ))
         if len(buf):
             # Event-time timer at the earliest buffered row + within: the
-            # bucket re-fires when its oldest pending start stabilizes even
+            # group re-fires when its oldest pending start stabilizes even
             # if no further events arrive (Flink's CEP cleanup timer parity).
             earliest = float(buf["__t"].min())
             state.setTimeoutTimestamp(
@@ -256,12 +252,7 @@ def match_pattern_stream(
         if out_rows:
             yield pd.DataFrame(out_rows, columns=out_cols)
 
-    if key_buckets is not None:
-        grouped = src.withColumn(
-            "__kg", F.pmod(F.xxhash64(F.col(key)), F.lit(key_buckets))
-        ).groupBy("__kg")
-    else:
-        grouped = src.groupBy(key)
+    grouped = src.withColumn("__kg", arrow_state.key_group(key)).groupBy("__kg")
     return grouped.applyInPandasWithState(
         fn,
         out_schema,

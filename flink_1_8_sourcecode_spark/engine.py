@@ -83,19 +83,11 @@ def _from_regions(masked_sql: str):
         yield m.end(), "".join(buf)
 
 
-def _table_aliases(masked_sql: str) -> set[str]:
-    """Identifiers bound as table aliases in FROM/JOIN clauses of the
-    (literal-masked) statement.  Only FROM regions are scanned (depth-
-    aware, nested content blanked), so SELECT-list expression aliases
-    can never shadow a catalog (r15 review finding); remaining false
-    positives only matter when they spell a registered catalog name,
-    where shadowing is the intended Calcite scope resolution."""
-    return {name for name, _ in _table_alias_bindings(masked_sql)}
-
-
 def _table_alias_bindings(masked_sql: str) -> list[tuple[str, int]]:
     """``(alias_lower, absolute_position)`` for each FROM/JOIN table
-    alias binding of the (literal-masked) statement."""
+    alias binding of the (literal-masked) statement.  Only FROM regions
+    are scanned (depth-aware, nested content blanked), so SELECT-list
+    expression aliases can never shadow a catalog."""
     out: list[tuple[str, int]] = []
     for start, region in _from_regions(masked_sql):
         for pat in _REGION_ALIAS_PATS:

@@ -547,7 +547,6 @@ def unbounded_stream_join(
     right_time: str | None = None,
     watermark_delay: str = "0 seconds",
     idle_state_ttl_seconds: float = 3600.0,
-    key_buckets: int = 64,
 ) -> DataFrame:
     """Unbounded (non-windowed) stream-stream join — the reference's
     retraction-mode SQL joins (flink-table/.../runtime/join/
@@ -575,13 +574,11 @@ def unbounded_stream_join(
     withIdleStateRetentionTime analogue — size it above the expected
     key re-arrival gap).
 
-    ``key_buckets`` shards join keys into Flink-style key groups
-    (KeyGroupRangeAssignment.java, see streaming/triggers.py): the
-    stateful shuffle is on ``hash(keys) % key_buckets`` and each
-    invocation handles all of a bucket's keys with keyed pandas merges
-    — amortizing the per-invocation JVM<->Python protocol cost that
-    dominates at high key cardinality.  Results are identical; size it
-    like Flink's maxParallelism (>= target executor cores).
+    Join keys are sharded into Flink-style key groups
+    (``streaming/arrow_state.key_group``, KeyGroupRangeAssignment.java):
+    each invocation handles all of a group's keys with keyed pandas
+    merges — amortizing the per-invocation JVM<->Python protocol cost
+    that dominates at high key cardinality.
     """
     keys = [on] if isinstance(on, str) else list(on)
     if how == "inner":
@@ -600,7 +597,7 @@ def unbounded_stream_join(
         )
     return _outer_unbounded_join(
         left, right, keys, how_n, left_time, right_time, watermark_delay,
-        idle_state_ttl_seconds, key_buckets,
+        idle_state_ttl_seconds,
     )
 
 
@@ -613,7 +610,6 @@ def _outer_unbounded_join(
     right_time: str,
     watermark_delay: str,
     idle_state_ttl_seconds: float,
-    key_buckets: int,
 ) -> DataFrame:
     """Symmetric hash join with timer-driven null-padding (see
     unbounded_stream_join).  Non-key columns of the two sides must be
@@ -622,11 +618,10 @@ def _outer_unbounded_join(
     Implementation notes (hot-path discipline):
     - payload columns travel as NATIVE Spark columns (the other side's
       columns null-cast before the union) — no JSON round-trip;
-    - the stateful shuffle is on a KEY GROUP (``hash(keys) %
-      key_buckets``): one applyInPandasWithState invocation per bucket
-      per micro-batch holds every key of the bucket, so the
-      JVM<->Python protocol cost amortizes across keys (Flink's
-      KeyGroupRangeAssignment design);
+    - the stateful shuffle is on a KEY GROUP (``arrow_state.key_group``):
+      one applyInPandasWithState invocation per group per micro-batch
+      holds every key of the group, so the JVM<->Python protocol cost
+      amortizes across keys (Flink's KeyGroupRangeAssignment design);
     - buffered state is Arrow-IPC-serialized pandas frames carrying the
       key columns, not pickled Python lists;
     - per-batch matching is vectorized keyed pandas merges: the new
@@ -637,8 +632,8 @@ def _outer_unbounded_join(
       is epoch 0, and a deadline off it alone would fire as soon as the
       watermark first advances, flushing null-padded rows for keys
       whose match is still in flight (the round-3 flake).  Expired keys
-      flush on ANY bucket invocation (data or timer) once the watermark
-      passes their deadline; the bucket timer is armed at the earliest
+      flush on ANY group invocation (data or timer) once the watermark
+      passes their deadline; the group timer is armed at the earliest
       pending deadline.
     """
     from collections.abc import Iterator
@@ -684,7 +679,7 @@ def _outer_unbounded_join(
     u = (
         _tag(left, left_time, 0)
         .unionByName(_tag(right, right_time, 1))
-        .withColumn("__kg", F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(key_buckets)))
+        .withColumn("__kg", arrow_state.key_group(*keys))
     )
 
     _concat = arrow_state.concat
@@ -808,7 +803,6 @@ def temporal_join_stream(
     right_cols: list[str] | None = None,
     how: str = "inner",
     watermark_delay: str = "0 seconds",
-    key_buckets: int = 64,
     version_ttl_seconds: float | None = None,
 ) -> DataFrame:
     """STREAMING event-time temporal join — the reference's
@@ -830,9 +824,9 @@ def temporal_join_stream(
     emitted probes leave state; versions older than the latest one
     at-or-before the watermark are dropped (every future probe has
     ``ts > watermark``, so only that latest version can still win).
-    The stateful shuffle is on a key group (``hash(keys) %
-    key_buckets``) with keyed pandas merges per bucket — the same
-    amortization as ``unbounded_stream_join``.  Scale: per-key state is
+    The stateful shuffle is on a key group (``arrow_state.key_group``)
+    with keyed pandas merges per group — the same amortization as
+    ``unbounded_stream_join``.  Scale: per-key state is
     one pending-probe window plus one pruned version chain, the same
     bound as the reference's keyed MapState.
 
@@ -889,9 +883,7 @@ def temporal_join_stream(
     u = (
         _tag(probe, probe_time, 0)
         .unionByName(_tag(versioned, version_time, 1))
-        .withColumn(
-            "__kg", F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(key_buckets))
-        )
+        .withColumn("__kg", arrow_state.key_group(*keys))
     )
 
     _concat = arrow_state.concat
@@ -993,7 +985,7 @@ def temporal_join_stream(
             elif ttl_ms is not None and len(vers):
                 # no probes pending: wake when the oldest retained
                 # version's TTL expires so dead-key state clears even
-                # if the bucket never sees data again
+                # if the group never sees data again
                 state.setTimeoutTimestamp(
                     max(int(vers["__t"].astype("int64").min()) + ttl_ms, wm + 1)
                 )

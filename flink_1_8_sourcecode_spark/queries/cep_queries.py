@@ -696,7 +696,7 @@ def cep_funnel_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = match_pattern_stream(
         stream, pat, key="user_id", time_col="ts", select_cols=["event_id"],
         watermark_delay="10 minutes", tiebreak="event_id",
-        key_buckets=16, emit_timeouts=True,
+        emit_timeouts=True,
     )
     name = _run_to_table(out, "q_cep_to", state_partitions=4)
     return (

@@ -120,7 +120,6 @@ def window_delta_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = triggered_tumble_agg(
         stream, key="user_id", time_col="ts", value_col="value",
         window_seconds=_WINDOW_S, trigger=("delta", _TRIGGER_DELTA),
-        key_buckets=32,
     )
     name = _run_to_table(out, "q_delta_trigger", state_partitions=4)
     return (
@@ -160,7 +159,6 @@ def window_delta_evictor(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = evicted_tumble_agg(
         stream, key="user_id", time_col="ts", value_col="value",
         window_seconds=_WINDOW_S, evictor=("delta", _EVICTOR_DELTA),
-        key_buckets=32,
     )
     name = _run_to_table(out, "q_delta_evictor", state_partitions=4)
     return (
@@ -235,7 +233,7 @@ def join_temporal_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = temporal_join_stream(
         probe, ver, on="user_id", probe_time="ts", version_time="vts",
         right_cols=["purch_value"], how="inner",
-        watermark_delay="10 minutes", key_buckets=16,
+        watermark_delay="10 minutes",
     )
     name = _run_to_table(out, "q_tjoin", state_partitions=4)
     return (

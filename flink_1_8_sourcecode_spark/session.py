@@ -8,10 +8,11 @@ a single tuned ``SparkSession``: Catalyst + AQE replace Flink's optimizer, and t
 configuration below is what we would ship to a 1000-executor cluster — the
 local[] master is only for tests.
 
-Scale rationale (100 TB discipline):
-- AQE on: runtime shuffle-partition coalescing, skew-join splitting and
-  dynamic join-strategy demotion replace hand-tuned Flink ship strategies
-  (flink-runtime/.../operators/shipping/OutputEmitter.java).
+Scale rationale (100 TB discipline).  Only confs that differ from Spark's
+defaults are set; AQE (runtime shuffle-partition coalescing, skew-join
+splitting and dynamic join-strategy demotion, which replace hand-tuned Flink
+ship strategies, flink-runtime/.../operators/shipping/OutputEmitter.java) is
+on by default and stays on.
 - autoBroadcastJoinThreshold 64m: TPC-H-style dims (region/nation/customer/
   supplier/part) stay broadcast even at large SF; the fact tables never are.
 - shuffle.partitions: a *starting* width; AQE coalesces down.  On a real
@@ -81,18 +82,11 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
         .config(CHECKPOINT_MANAGER_CONF, CHECKPOINT_MANAGER)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )

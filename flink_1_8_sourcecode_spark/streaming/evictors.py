@@ -12,11 +12,11 @@ state stays bounded at ``n`` elements (count evictor) or one time-span
 here) applies to the survivors when the global watermark closes the
 window — evict-before-apply, the reference default (``doEvictAfter=false``).
 
-Scale notes: ``key_buckets`` shards keys into Flink-style key groups
-(KeyGroupRangeAssignment.java — see ``triggers.py`` module docstring);
-the element buffer rides as a packed float64 matrix (typed, no pickle;
-see ``arrow_state.pack_f64``); eviction is vectorized numpy — a lexsort
-per bucket-batch plus boolean masks, no per-element Python.  The
+Scale notes: the stateful shuffle is on Flink-style key groups
+(``arrow_state.key_group`` — see ``triggers.py`` module docstring); the
+element buffer rides as an Arrow frame with the key in its own Spark
+type (``arrow_state.ser``/``de``); eviction is vectorized numpy — a
+lexsort per group-batch plus boolean masks, no per-element Python.  The
 user-supplied ``delta_fn`` is tried on whole numpy arrays first and
 falls back to per-element calls only if it is not vectorizable.
 """
@@ -28,13 +28,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from flink_1_8_sourcecode_spark.streaming import arrow_state
-
-_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
 def evicted_tumble_agg(
@@ -46,7 +42,6 @@ def evicted_tumble_agg(
     evictor: tuple[str, float],
     watermark_delay: str = "0 seconds",
     delta_fn=None,
-    key_buckets: int | None = None,
 ) -> DataFrame:
     """Tumbling event-time windows whose buffer passes through an
     evictor before aggregating:
@@ -67,10 +62,6 @@ def evicted_tumble_agg(
     list for ANY evictor); eviction then runs once at firing time
     (evict-before-apply, doEvictAfter=false).
 
-    ``key_buckets`` shards keys into that many key groups (requires an
-    integral key column); results are identical, only the state
-    sharding changes.
-
     Output: ``(key, w_start, cnt, total)`` over the surviving elements,
     one row per window at watermark passage.
     """
@@ -81,13 +72,8 @@ def evicted_tumble_agg(
         delta_fn = lambda e, last: abs(e - last)  # noqa: E731
     key_field = df.schema[key]
     key_name, key_ddl = key_field.name, key_field.dataType.simpleString()
-    numeric_key = isinstance(key_field.dataType, _INTEGRAL)
-    bucketed = key_buckets is not None
-    if bucketed and not numeric_key:
-        raise ValueError(
-            f"key_buckets requires an integral key column; {key_name} is {key_ddl}"
-        )
     out_schema = f"{key_name} {key_ddl}, w_start timestamp, cnt long, total double"
+    buf_cols = ["k", "ws", "t", "v"]
 
     def delta_keep_mask(varr: np.ndarray, last_v: float) -> np.ndarray:
         """Survivors under the delta rule (delta < threshold); vectorized
@@ -100,26 +86,29 @@ def evicted_tumble_agg(
             pass
         return np.array([delta_fn(float(x), last_v) < param for x in varr], dtype=bool)
 
-    def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        # element buffer rides as a packed (n, 4) float64 matrix of
-        # (u, ws, t, v); u is the key value (0.0 when the invocation is
-        # already per-key and the key is non-numeric)
-        parts = [arrow_state.unpack_f64(state.get[0], 4)] if state.exists else []
+    def fn(_kg, batches: Iterator[pd.DataFrame], state: GroupState):
+        # element buffer rides as an Arrow frame of (key, ws, t, v); the
+        # numpy work below runs on a float (n, 4) matrix whose first
+        # column is the key's dense code into ``uniq``
+        parts = [arrow_state.de(bytes(state.get[0]), buf_cols)] if state.exists else []
         wm = state.getCurrentWatermarkMs() / 1000.0
 
         for pdf in batches:
             t = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
             v = pdf[value_col].astype(float).to_numpy()
-            if numeric_key:
-                u = pdf[key_name].to_numpy().astype(np.float64)
-            else:
-                u = np.zeros(len(pdf))
             ws = t - np.mod(t, window_seconds)
             live = ws + window_seconds > wm  # behind-watermark: window already fired
             if live.any():
-                parts.append(np.column_stack((u[live], ws[live], t[live], v[live])))
+                parts.append(pd.DataFrame({
+                    "k": pdf[key_name].to_numpy()[live],
+                    "ws": ws[live], "t": t[live], "v": v[live],
+                }))
 
-        buf = np.vstack(parts) if parts else np.empty((0, 4))
+        frame = arrow_state.concat(parts, buf_cols)
+        codes, uniq = pd.factorize(frame["k"], use_na_sentinel=False)
+        buf = np.column_stack(
+            [codes] + [frame[c].to_numpy(dtype=np.float64) for c in buf_cols[1:]]
+        )
 
         def group_bounds(keys2: np.ndarray):
             """Start/end indices of each (u, ws) run (buf sorted)."""
@@ -148,7 +137,7 @@ def evicted_tumble_agg(
                     keep = buf[:, 2] > buf[grp_end - 1, 2] - param
                 buf = buf[keep]
 
-        out_rows: list[tuple[float, float, int, float]] = []
+        out_rows: list[tuple] = []
         if len(buf):
             closing = buf[:, 1] + window_seconds <= wm
             fired, buf = buf[closing], buf[~closing]
@@ -159,39 +148,36 @@ def evicted_tumble_agg(
                     if kind == "delta":
                         varr = varr[delta_keep_mask(varr, float(varr[-1]))]
                     out_rows.append(
-                        (float(fired[s, 0]), float(fired[s, 1]), len(varr), float(varr.sum()))
+                        (uniq[int(fired[s, 0])], float(fired[s, 1]), len(varr), float(varr.sum()))
                     )
 
         if len(buf):
-            state.update((arrow_state.pack_f64(buf),))
+            state.update((arrow_state.ser(pd.DataFrame({
+                "k": uniq.take(buf[:, 0].astype(np.int64)),
+                "ws": buf[:, 1], "t": buf[:, 2], "v": buf[:, 3],
+            })),))
             target_ms = int((buf[:, 1].min() + window_seconds) * 1000)
             state.setTimeoutTimestamp(max(target_ms, int(wm * 1000) + 1))
         elif state.exists:
-            # no open windows: drop the key's state entry entirely so
+            # no open windows: drop the group's state entry entirely so
             # state stays bounded by ACTIVE keys, not all keys ever seen
             state.remove()
         if out_rows:
             u_arr, ws_arr, cnt_arr, tot_arr = zip(*out_rows)
-            if bucketed:
-                key_col = np.array(u_arr).astype(np.int64)
-            else:
-                key_col = key_tuple[0]  # invocation is per key
             yield pd.DataFrame(
                 {
-                    key_name: key_col,
+                    key_name: list(u_arr),
                     "w_start": pd.to_datetime(np.array(ws_arr), unit="s"),
                     "cnt": np.array(cnt_arr, dtype="int64"),
                     "total": np.array(tot_arr, dtype="float64"),
                 }
             )
 
-    src = df.withWatermark(time_col, watermark_delay)
-    if bucketed:
-        grouped = src.withColumn(
-            "__kg", F.pmod(F.xxhash64(F.col(key)), F.lit(key_buckets))
-        ).groupBy("__kg")
-    else:
-        grouped = src.groupBy(key)
+    grouped = (
+        df.withWatermark(time_col, watermark_delay)
+        .withColumn("__kg", arrow_state.key_group(key))
+        .groupBy("__kg")
+    )
     return grouped.applyInPandasWithState(
         fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
     )

@@ -545,7 +545,7 @@ def streaming_heavy_hitters(
     State per bucket = the counter summary + a seen-count: O(k) — the
     whole point vs a streaming groupBy count, whose state grows with
     the open-domain key space.  ``key_buckets`` plays maxParallelism
-    (hash re-deal of items, same knob as temporal_join_stream).
+    (hash re-deal of items).
     Output mode "update": each batch replaces the bucket's snapshot.
     """
     import numpy as np
@@ -735,7 +735,7 @@ def streaming_rate_limit(
     batch operator's on the same data — the property that makes
     backfills reproduce the online throttle.
 
-    State per key = the pending buffer (Arrow blob) plus one
+    State per key = two Arrow frames: the pending buffer and one
     (bucket, admitted) counter row per OPEN bucket — buckets the
     watermark has closed are pruned, so state is bounded by
     disorder/window, never the stream.  Per batch: one stable sort, a
@@ -754,21 +754,22 @@ def streaming_rate_limit(
     out_schema = ", ".join(
         f"{c} {src.schema[c].dataType.simpleString()}" for c in cols
     ) + ", window_start long"
+    cnt_cols = ["bucket", "admitted"]
 
     def fn(key_tuple, batches, state: GroupState):
         if state.exists:
             pend_blob, cnt_blob = state.get
             pend_parts = [arrow_state.de(bytes(pend_blob), cols)]
-            cnts = arrow_state.unpack_f64(bytes(cnt_blob), 2)
+            cnts = arrow_state.de(bytes(cnt_blob), cnt_cols)
         else:
-            pend_parts, cnts = [], np.zeros((0, 2))
+            pend_parts, cnts = [], pd.DataFrame(columns=cnt_cols)
         pend_parts += [pdf[cols] for pdf in batches]
         pend = arrow_state.concat(pend_parts, cols)
         wm = state.getCurrentWatermarkMs() / 1000.0
 
         keep = pend
         out = None
-        counts = {int(b): int(c) for b, c in cnts}
+        counts = {int(b): int(c) for b, c in zip(cnts["bucket"], cnts["admitted"])}
         if len(pend):
             pend = pend.sort_values([time_col, id_col], kind="stable",
                                     ignore_index=True)
@@ -814,13 +815,10 @@ def streaming_rate_limit(
             if out is not None and len(out):
                 yield out
             return
-        cnt_arr = np.array(
-            [[float(b), float(c)] for b, c in sorted(counts.items())]
-        ) if counts else np.zeros((0, 2))
         state.update(
             (
                 arrow_state.ser(keep.reset_index(drop=True)),
-                arrow_state.pack_f64(cnt_arr),
+                arrow_state.ser(pd.DataFrame(sorted(counts.items()), columns=cnt_cols)),
             )
         )
         wm_ms = state.getCurrentWatermarkMs()

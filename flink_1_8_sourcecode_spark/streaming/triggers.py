@@ -13,21 +13,16 @@ that receive no further data, exactly like Flink's event-time timers.
 
 Scale notes:
 
-- **Key groups.** Flink never runs one state task per user key: keys
-  hash into a fixed number of key groups
-  (flink-runtime/.../state/KeyGroupRangeAssignment.java, default
-  maxParallelism 128) and each task owns a key-group range.
-  ``key_buckets`` is the same design here: the stateful shuffle is on
-  ``hash(key) % key_buckets``, one applyInPandasWithState invocation
-  per bucket per micro-batch, and per-(key, window) accumulators live
-  inside the bucket's state.  This amortizes the per-invocation
-  JVM<->Python protocol cost over all keys of the bucket — at high key
-  cardinality the per-key-invocation alternative is the scale-killer,
-  not the arithmetic.  Size ``key_buckets`` like Flink's
-  maxParallelism: >= the executor-core count you want to saturate.
-- **State.** Per bucket, one packed float64 matrix of
-  (key, w_start, cnt, total, cursor) open-window accumulators (typed,
-  no pickle; see ``arrow_state.pack_f64``), never buffered rows.
+- **Key groups.** The stateful shuffle is on ``arrow_state.key_group``
+  (Flink's KeyGroupRangeAssignment design): one applyInPandasWithState
+  invocation per key group per micro-batch, with the per-(key, window)
+  accumulators of all the group's keys inside the group's state.  This
+  amortizes the per-invocation JVM<->Python protocol cost over all keys
+  of the group — at high key cardinality the per-key-invocation
+  alternative is the scale-killer, not the arithmetic.
+- **State.** Per key group, one Arrow frame of (key, w_start, cnt,
+  total, cursor) open-window accumulators, the key in its own Spark
+  type (``arrow_state.ser``/``de``), never buffered rows.
 - **Vectorization.** Per-batch work is numpy: count-trigger firings
   fall out of modular arithmetic on cumulative counts,
   continuous-trigger firings out of boundary crossings, and emitted
@@ -46,13 +41,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from flink_1_8_sourcecode_spark.streaming import arrow_state
-
-_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
 def _delta_fire_scan(delta_fn, param, cursor, wvals, chunk=512):
@@ -170,7 +161,6 @@ def triggered_tumble_agg(
     watermark_delay: str = "0 seconds",
     purging: bool = False,
     delta_fn=None,
-    key_buckets: int | None = None,
 ) -> DataFrame:
     """Tumbling event-time sum/count windows with an early-firing trigger.
 
@@ -191,11 +181,6 @@ def triggered_tumble_agg(
     reports only the delta since the previous one.  The final firing at
     watermark passage always purges the window.
 
-    ``key_buckets`` shards keys into that many key groups (Flink's
-    KeyGroupRangeAssignment design — see module docstring) instead of
-    one stateful invocation per key; requires an integral key column.
-    Results are identical; only the state sharding changes.
-
     Output: ``(key, w_start timestamp, cnt, total, is_final)``; rows
     behind the watermark for an already-purged window are dropped
     (Flink default without allowed lateness).
@@ -209,53 +194,49 @@ def triggered_tumble_agg(
         delta_fn = lambda last, cur: abs(cur - last)  # noqa: E731
     key_field = df.schema[key]
     key_name, key_ddl = key_field.name, key_field.dataType.simpleString()
-    numeric_key = isinstance(key_field.dataType, _INTEGRAL)
-    bucketed = key_buckets is not None
-    if bucketed and not numeric_key:
-        raise ValueError(
-            f"key_buckets requires an integral key column; {key_name} is {key_ddl}"
-        )
     out_schema = (
         f"{key_name} {key_ddl}, w_start timestamp, cnt long, total double, is_final boolean"
     )
+    st_cols = ["k", "w", "cnt", "total", "cursor"]
 
-    def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        # wins: (u, ws) -> [cnt, total, cursor]; cursor NaN = DeltaTrigger's
-        # empty ValueState.  u is the key value (0.0 when the invocation
-        # is already per-key and the key is non-numeric).  State rides as
-        # a packed (n, 5) float64 matrix — typed, no pickle.
-        wins: dict[tuple[float, float], list] = {}
+    def fn(_kg, batches: Iterator[pd.DataFrame], state: GroupState):
+        # wins: (key, ws) -> [cnt, total, cursor]; cursor NaN = DeltaTrigger's
+        # empty ValueState.  State rides as an Arrow frame, one row per
+        # open (key, window).
+        wins: dict[tuple, list] = {}
         if state.exists:
-            for u, w, c, t, cu in arrow_state.unpack_f64(state.get[0], 5):
-                wins[(float(u), float(w))] = [int(c), float(t), float(cu)]
+            st = arrow_state.de(bytes(state.get[0]), st_cols)
+            for u, w, c, t, cu in zip(*(st[col].tolist() for col in st_cols)):
+                wins[(u, w)] = [c, t, cu]
         wm = state.getCurrentWatermarkMs() / 1000.0  # global event-time watermark
-        out_u: list[float] = []
+        out_u: list = []
         out_ws: list[float] = []
         out_cnt: list[int] = []
         out_total: list[float] = []
         out_final: list[bool] = []
 
-        def emit(u: float, ws: float, cnt: int, total: float, final: bool) -> None:
+        def emit(u, ws: float, cnt: int, total: float, final: bool) -> None:
             out_u.append(u)
             out_ws.append(ws)
             out_cnt.append(int(cnt))
             out_total.append(float(total))
             out_final.append(final)
 
-        u_parts, ts_parts, val_parts = [], [], []
+        key_parts, ts_parts, val_parts = [], [], []
         for pdf in batches:
             ts_parts.append(
                 pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
             )
             val_parts.append(pdf[value_col].astype(float).to_numpy())
-            if numeric_key:
-                u_parts.append(pdf[key_name].to_numpy().astype(np.float64))
-            else:
-                u_parts.append(np.zeros(len(pdf)))
+            key_parts.append(pdf[key_name])
         ts = np.concatenate(ts_parts) if ts_parts else np.empty(0)
         if len(ts):
             vals = np.concatenate(val_parts)
-            us = np.concatenate(u_parts)
+            # keys as dense codes for the numpy work, values by code
+            us, uniq = pd.factorize(
+                pd.concat(key_parts, ignore_index=True), use_na_sentinel=False
+            )
+            kvals = uniq.tolist()
             ws_all = ts - np.mod(ts, window_seconds)
             live = ws_all + window_seconds > wm  # behind-watermark rows dropped
             ts, vals, us, ws_all = ts[live], vals[live], us[live], ws_all[live]
@@ -271,7 +252,7 @@ def triggered_tumble_agg(
             ends = np.concatenate((starts[1:], [len(us)]))
 
             for s, e in zip(starts, ends):
-                u, w = float(us[s]), float(ws_all[s])
+                u, w = kvals[us[s]], float(ws_all[s])
                 wvals = vals[s:e]
                 acc = wins.get((u, w))
                 if acc is None:
@@ -294,7 +275,7 @@ def triggered_tumble_agg(
                     out_total.extend(float(t) for t in tots)
                     out_final.extend([False] * n)
 
-        for (u, w) in sorted(wins):
+        for u, w in list(wins):
             acc = wins[(u, w)]
             if kind == "continuous":
                 # fire at every passed epoch-aligned boundary in the window
@@ -308,11 +289,10 @@ def triggered_tumble_agg(
                 del wins[(u, w)]
 
         if wins:
-            st_new = np.array(
-                [[u, w, a[0], a[1], a[2]] for (u, w), a in wins.items()],
-                dtype=np.float64,
+            st_new = pd.DataFrame(
+                [(u, w, *a) for (u, w), a in wins.items()], columns=st_cols
             )
-            state.update((arrow_state.pack_f64(st_new),))
+            state.update((arrow_state.ser(st_new),))
             # event-time timer at the earliest pending deadline (next
             # window end or continuous boundary), like Flink's
             # registerEventTimeTimer — must sit beyond the watermark
@@ -322,17 +302,13 @@ def triggered_tumble_agg(
             target_ms = int(min(deadlines) * 1000)
             state.setTimeoutTimestamp(max(target_ms, int(wm * 1000) + 1))
         elif state.exists:
-            # no open windows: drop the key's state entry entirely so
+            # no open windows: drop the group's state entry entirely so
             # state stays bounded by ACTIVE keys, not all keys ever seen
             state.remove()
         if out_ws:
-            if bucketed:
-                key_col = np.array(out_u).astype(np.int64)
-            else:
-                key_col = key_tuple[0]  # invocation is per key
             yield pd.DataFrame(
                 {
-                    key_name: key_col,
+                    key_name: out_u,
                     "w_start": pd.to_datetime(np.array(out_ws), unit="s"),
                     "cnt": np.array(out_cnt, dtype="int64"),
                     "total": np.array(out_total, dtype="float64"),
@@ -340,13 +316,11 @@ def triggered_tumble_agg(
                 }
             )
 
-    src = df.withWatermark(time_col, watermark_delay)
-    if bucketed:
-        grouped = src.withColumn(
-            "__kg", F.pmod(F.xxhash64(F.col(key)), F.lit(key_buckets))
-        ).groupBy("__kg")
-    else:
-        grouped = src.groupBy(key)
+    grouped = (
+        df.withWatermark(time_col, watermark_delay)
+        .withColumn("__kg", arrow_state.key_group(key))
+        .groupBy("__kg")
+    )
     return grouped.applyInPandasWithState(
         fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
     )

@@ -187,10 +187,6 @@ def _is_int_lit(x) -> bool:
     return isinstance(x, _Lit) and isinstance(x.value, int)
 
 
-def _as_py_int(x) -> int:
-    return x.value
-
-
 class _Lit:
     """Wrapper so suffix calls can see literal python values before they
     become Columns (e.g. round's scale must be a python int)."""

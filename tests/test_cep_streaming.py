@@ -158,15 +158,18 @@ def test_stream_cep_skip_to_first_across_batches(spark, tmp_path):
 
 
 def test_stream_cep_bucketed_key_groups_same_result(spark, chunk_dir):
-    """key_buckets (Flink key-group sharding) must be result-identical
-    to per-key sharding — match sets and per-key id grouping alike."""
+    """The NFA state is sharded into Flink-style key groups: never more
+    state rows than the users' key groups, fewer than the users, and
+    the match sets and per-key id grouping equal the batch matcher's."""
+    from flink_1_8_sourcecode_spark.streaming.arrow_state import key_group
+
     stream = sources.read_event_stream(spark, chunk_dir).filter(
         F.col("event_type").isin("signup", "purchase", "noop")
     )
     out = match_pattern_stream(
         stream, PATTERN, key="user_id", time_col="ts",
         select_cols=["event_id"], watermark_delay="10 minutes",
-        tiebreak="event_id", key_buckets=8,
+        tiebreak="event_id",
     )
     q = out.writeStream.format("memory").queryName("t_cep_kg").outputMode("append").start()
     try:
@@ -175,6 +178,14 @@ def test_stream_cep_bucketed_key_groups_same_result(spark, chunk_dir):
         q.stop()
     got = spark.table("t_cep_kg").toPandas()
     got = got[got.user_id >= 0]
+
+    users = spark.read.parquet(chunk_dir).select("user_id").distinct()
+    n_users = users.count()
+    n_groups = users.select(key_group("user_id")).distinct().count()
+    state_rows = max(
+        op["numRowsTotal"] for p in q.recentProgress for op in p["stateOperators"]
+    )
+    assert 0 < state_rows <= n_groups < n_users
 
     batch = match_pattern(
         table(spark, SF_SMALL, "events").filter(

@@ -1,5 +1,6 @@
 """Session configuration the engine depends on: the generated-class cache
-bound and the runtime confs applied to sessions built outside get_spark."""
+bound, Spark's stateful correctness check, and the runtime confs applied
+to sessions built outside get_spark."""
 
 from __future__ import annotations
 
@@ -50,3 +51,11 @@ def test_entry_path_applies_the_checkpoint_manager(spark):
             spark.conf.unset(CHECKPOINT_MANAGER_CONF)
         else:
             spark.conf.set(CHECKPOINT_MANAGER_CONF, saved)
+
+
+def test_stateful_correctness_check_stays_on(spark):
+    """Spark rejects streaming plans whose stateful operators could emit
+    wrong results (e.g. an aggregation over a non-append stateful output);
+    the engine's session keeps that check enabled."""
+    conf = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    assert spark.conf.get(conf) == "true"

@@ -244,7 +244,7 @@ def test_temporal_join_stream_state_survives_restart(spark, tmp_path):
         j = temporal_join_stream(
             probe, ver, on="k", probe_time="pts", version_time="vts",
             right_cols=["payload"], how="inner",
-            watermark_delay="0 seconds", key_buckets=1,
+            watermark_delay="0 seconds",
         )
         return (
             j.writeStream.format("parquet")

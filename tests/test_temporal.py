@@ -150,7 +150,7 @@ def test_temporal_join_stream_equals_batch_asof(spark):
     out = temporal_join_stream(
         probe_s, ver_s, on="user_id", probe_time="ts", version_time="vts",
         right_cols=["purch_value", "purch_id"], how="left",
-        watermark_delay="10 minutes", key_buckets=8,
+        watermark_delay="10 minutes",
     )
     name = _run_to_table(out, "q_tjs_test", state_partitions=4)
     streamed = (
@@ -236,7 +236,7 @@ def test_temporal_join_stream_version_ttl(spark):
         out = temporal_join_stream(
             probe, ver, on="k", probe_time="pts", version_time="vts",
             right_cols=["payload"], how="inner",
-            watermark_delay="0 seconds", key_buckets=1,
+            watermark_delay="0 seconds",
             version_ttl_seconds=ttl,
         )
         name = _run_to_table(out, "q_tjs_ttl", state_partitions=1)

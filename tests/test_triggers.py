@@ -12,36 +12,57 @@ from pyspark.sql import functions as F
 
 from flink_1_8_sourcecode_spark.catalog import table
 from flink_1_8_sourcecode_spark.streaming import sources
+from flink_1_8_sourcecode_spark.streaming.arrow_state import key_group
 from flink_1_8_sourcecode_spark.streaming.triggers import triggered_tumble_agg
 from tests.conftest import SF_SMALL, assert_frames_match
 
 WINDOW_S = 7 * 86400.0  # weekly: sf0.001 is sparse, early firings need multi-event windows
+EVENTS_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+)
 
 
-def _run(spark, tmp_path, sub, trigger, purging=False, key_buckets=None):
+def _drain(spark, out, name):
+    """Run a bounded stream into a memory table; return its rows and the
+    most state rows the stateful operator held after any micro-batch."""
+    q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    state_rows = max(
+        (op["numRowsTotal"] for p in q.recentProgress for op in p["stateOperators"]),
+        default=0,
+    )
+    return spark.table(name).toPandas(), state_rows
+
+
+def _key_groups_of_users(spark):
+    """(distinct users incl. the -1 sentinel, distinct key groups they hash to)."""
+    users = table(spark, SF_SMALL, "events").select("user_id").union(
+        spark.createDataFrame([(-1,)], "user_id long")
+    ).distinct()
+    return users.count(), users.select(key_group("user_id")).distinct().count()
+
+
+def _run(spark, tmp_path, sub, trigger, purging=False):
+    """(real-key output rows, most state rows held) of a triggered run."""
     chunks = str(tmp_path / sub)
     sources.write_event_chunks(spark, SF_SMALL, chunks, n_chunks=5)
     ev = table(spark, SF_SMALL, "events")
     max_ts = ev.agg(F.max("ts")).first()[0]
     sentinel = spark.createDataFrame(
-        [(10**9, max_ts + dt.timedelta(days=30), -1, "noop", 0.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+        [(10**9, max_ts + dt.timedelta(days=30), -1, "noop", 0.0, "{}")], EVENTS_DDL
     )
     sentinel.write.mode("append").parquet(chunks + "/__chunk=zz_sentinel")
     stream = sources.read_event_stream(spark, chunks)
     out = triggered_tumble_agg(
         stream, key="user_id", time_col="ts", value_col="value",
         window_seconds=WINDOW_S, trigger=trigger, purging=purging,
-        watermark_delay="0 seconds", key_buckets=key_buckets,
+        watermark_delay="0 seconds",
     )
-    name = f"t_trig_{sub}"
-    q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.table(name).toPandas()
-    return got[got.user_id >= 0]
+    got, state_rows = _drain(spark, out, f"t_trig_{sub}")
+    return got[got.user_id >= 0], state_rows
 
 
 def _batch_expected(spark):
@@ -55,7 +76,7 @@ def _batch_expected(spark):
 
 
 def test_count_trigger_early_firings_and_final(spark, tmp_path):
-    got = _run(spark, tmp_path, "count_trig", trigger=("count", 5))
+    got, _ = _run(spark, tmp_path, "count_trig", trigger=("count", 5))
     early, final = got[~got.is_final], got[got.is_final]
     assert len(early) > 0  # CountTrigger fired before window close
     # every early firing reports a multiple-of-5 element count (FIRE, no purge)
@@ -68,7 +89,7 @@ def test_count_trigger_early_firings_and_final(spark, tmp_path):
 
 
 def test_continuous_event_time_trigger(spark, tmp_path):
-    got = _run(spark, tmp_path, "cont_trig", trigger=("continuous", 86400.0))
+    got, _ = _run(spark, tmp_path, "cont_trig", trigger=("continuous", 86400.0))
     early, final = got[~got.is_final], got[got.is_final]
     assert len(early) > 0  # fired at daily boundaries inside weekly windows
     assert_frames_match(
@@ -169,7 +190,7 @@ def test_delta_trigger_early_firings_and_final(spark, tmp_path):
     """DeltaTrigger.java parity: FIRE when |value - last_fired| exceeds
     the threshold (comparison point updates on each fire); finals must
     still equal the batch aggregate."""
-    got = _run(spark, tmp_path, "delta_trig", trigger=("delta", 50.0))
+    got, _ = _run(spark, tmp_path, "delta_trig", trigger=("delta", 50.0))
     early, final = got[~got.is_final], got[got.is_final]
     assert len(early) > 0  # value jumps past 50 occur in every chunk
     assert_frames_match(
@@ -222,10 +243,14 @@ def test_delta_evictor_keeps_near_last(spark, tmp_path):
 
 
 def test_count_trigger_bucketed_key_groups_same_result(spark, tmp_path):
-    """key_buckets shards keys into Flink-style key groups
-    (KeyGroupRangeAssignment.java); the trigger result must be identical
-    to the per-key sharding — early-fire invariants and finals alike."""
-    got = _run(spark, tmp_path, "kg_trig", trigger=("count", 5), key_buckets=8)
+    """State is sharded into Flink-style key groups
+    (KeyGroupRangeAssignment.java): the operator never holds more state
+    rows than the users' key groups, fewer than the users themselves,
+    and the result equals the batch aggregate — early-fire invariants
+    and finals alike."""
+    got, state_rows = _run(spark, tmp_path, "kg_trig", trigger=("count", 5))
+    n_users, n_groups = _key_groups_of_users(spark)
+    assert 0 < state_rows <= n_groups < n_users
     early, final = got[~got.is_final], got[got.is_final]
     assert len(early) > 0
     assert (early.cnt % 5 == 0).all()
@@ -236,24 +261,87 @@ def test_count_trigger_bucketed_key_groups_same_result(spark, tmp_path):
     )
 
 
-def test_key_buckets_rejects_non_integral_key(spark):
-    """The key-group path packs key values into float64 state — only
-    integral keys are exact, others must be rejected loudly."""
-    import pytest
+def test_string_key_matches_batch_aggregate(spark, tmp_path):
+    """Key-group state keeps the key in its own Spark type: a string key
+    streams through the trigger and its finals equal the batch tumbling
+    aggregate on the same string key."""
+    chunks = str(tmp_path / "str_key")
+    sources.write_event_chunks(spark, SF_SMALL, chunks, n_chunks=4)
+    ev = table(spark, SF_SMALL, "events")
+    max_ts = ev.agg(F.max("ts")).first()[0]
+    spark.createDataFrame(
+        [(10**9, max_ts + dt.timedelta(days=30), -1, "noop", 0.0, "{}")], EVENTS_DDL
+    ).write.mode("append").parquet(chunks + "/__chunk=zz_sentinel")
+    as_str = F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("uid")
+    stream = sources.read_event_stream(spark, chunks).select(as_str, "ts", "value")
+    out = triggered_tumble_agg(
+        stream, key="uid", time_col="ts", value_col="value",
+        window_seconds=WINDOW_S, trigger=("count", 5),
+    )
+    got, _ = _drain(spark, out, "t_trig_str_key")
+    final = got[got.is_final & (got.uid != "u-1")]
+    expected = (
+        ev.groupBy(as_str, F.window("ts", "7 days").alias("w"))
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total"))
+        .select("uid", F.col("w.start").alias("w_start"), "cnt", "total")
+        .toPandas()
+    )
+    assert final.uid.map(type).eq(str).all()
+    assert_frames_match(
+        final[["uid", "w_start", "cnt", "total"]].reset_index(drop=True),
+        expected,
+        name="string_key_trigger_final",
+    )
 
-    stream = sources.rate_stream(spark).withColumn("k", F.lit("x"))
-    with pytest.raises(ValueError, match="integral key"):
-        triggered_tumble_agg(
-            stream, key="k", time_col="timestamp", value_col="value",
-            window_seconds=60.0, trigger=("count", 5), key_buckets=4,
+
+def test_long_keys_beyond_float_precision_stay_distinct(spark, tmp_path):
+    """Keys 2**53 and 2**53 + 1 round to the same float64, so key-group
+    state that carried keys as floats merged them into one.  Both the
+    trigger and the evictor must return them distinct and exact."""
+    import pandas as pd
+
+    from flink_1_8_sourcecode_spark.streaming.evictors import evicted_tumble_agg
+
+    k1, k2 = 2**53, 2**53 + 1
+    rows = [
+        (1, dt.datetime(2024, 1, 1, 1), k1, "e", 1.0, "{}"),
+        (2, dt.datetime(2024, 1, 1, 2), k2, "e", 10.0, "{}"),
+        (3, dt.datetime(2024, 1, 1, 3), k1, "e", 2.0, "{}"),
+        # sentinel advances the watermark past the window
+        (9, dt.datetime(2024, 3, 1), -1, "noop", 0.0, "{}"),
+    ]
+    chunks = str(tmp_path / "big_keys")
+    for i, r in enumerate(rows):
+        spark.createDataFrame([r], EVENTS_DDL).write.mode("append").parquet(
+            f"{chunks}/__chunk={i}"
         )
+    day = pd.Timestamp("2024-01-01")
+    expected = {(k1, day, 2, 3.0), (k2, day, 1, 10.0)}
+    runs = {
+        "trigger": lambda s: triggered_tumble_agg(
+            s, key="user_id", time_col="ts", value_col="value",
+            window_seconds=86400.0, trigger=("count", 100),
+        ),
+        "evictor": lambda s: evicted_tumble_agg(
+            s, key="user_id", time_col="ts", value_col="value",
+            window_seconds=86400.0, evictor=("count", 100),
+        ),
+    }
+    for kind, build in runs.items():
+        got, _ = _drain(spark, build(sources.read_event_stream(spark, chunks)),
+                        f"t_big_keys_{kind}")
+        got = got[got.user_id >= 0]
+        assert {
+            (int(u), pd.Timestamp(w), int(c), float(t))
+            for u, w, c, t in zip(got.user_id, got.w_start, got.cnt, got.total)
+        } == expected, (kind, got)
 
 
 def test_purging_count_trigger_emits_deltas(spark, tmp_path):
     """PurgingTrigger(CountTrigger) parity: each early firing reports
     only the delta since the last firing; summed early deltas + the
     final residue equal the full batch window total."""
-    got = _run(spark, tmp_path, "purge_trig", trigger=("count", 5), purging=True)
+    got, _ = _run(spark, tmp_path, "purge_trig", trigger=("count", 5), purging=True)
     early = got[~got.is_final]
     assert len(early) > 0
     assert (early.cnt == 5).all()  # each FIRE_AND_PURGE covers exactly 5 rows
@@ -340,8 +428,11 @@ def test_scan_group_matches_per_row_reference():
 
 
 def test_evictor_bucketed_key_groups_same_result(spark, tmp_path):
-    """evicted_tumble_agg with key_buckets must equal the per-key
-    sharding exactly (same count-evictor window results)."""
+    """evicted_tumble_agg keeps its element buffers per key group: never
+    more state rows than the users' key groups, fewer than the users,
+    and the count-evictor windows equal the batch last-n reference."""
+    from pyspark.sql import Window
+
     from flink_1_8_sourcecode_spark.streaming.evictors import evicted_tumble_agg
 
     chunks = str(tmp_path / "kg_evict")
@@ -349,27 +440,28 @@ def test_evictor_bucketed_key_groups_same_result(spark, tmp_path):
     ev = table(spark, SF_SMALL, "events")
     max_ts = ev.agg(F.max("ts")).first()[0]
     sentinel = spark.createDataFrame(
-        [(10**9, max_ts + dt.timedelta(days=30), -1, "noop", 0.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+        [(10**9, max_ts + dt.timedelta(days=30), -1, "noop", 0.0, "{}")], EVENTS_DDL
     )
     sentinel.write.mode("append").parquet(chunks + "/__chunk=zz_sentinel")
 
-    outs = []
-    for kb in (None, 8):
-        stream = sources.read_event_stream(spark, chunks)
-        out = evicted_tumble_agg(
-            stream, key="user_id", time_col="ts", value_col="value",
-            window_seconds=WINDOW_S, evictor=("count", 3), key_buckets=kb,
-        )
-        name = f"t_kg_evict_{kb}"
-        q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        pdf = spark.table(name).toPandas()
-        pdf = pdf[pdf.user_id >= 0].sort_values(
-            ["user_id", "w_start"]
-        ).reset_index(drop=True)
-        outs.append(pdf)
-    assert_frames_match(outs[0], outs[1], name="evictor_key_groups")
+    stream = sources.read_event_stream(spark, chunks)
+    out = evicted_tumble_agg(
+        stream, key="user_id", time_col="ts", value_col="value",
+        window_seconds=WINDOW_S, evictor=("count", 3),
+    )
+    got, state_rows = _drain(spark, out, "t_kg_evict")
+    got = got[got.user_id >= 0].reset_index(drop=True)
+    n_users, n_groups = _key_groups_of_users(spark)
+    assert 0 < state_rows <= n_groups < n_users
+
+    w = Window.partitionBy("user_id", F.window("ts", "7 days")).orderBy(F.col("ts").desc())
+    expected = (
+        ev.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 3)
+        .groupBy("user_id", F.window("ts", "7 days").alias("w"))
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("total"))
+        .select("user_id", F.col("w.start").alias("w_start"), "cnt", "total")
+        .toPandas()
+    )
+    assert_frames_match(got[["user_id", "w_start", "cnt", "total"]], expected,
+                        name="evictor_key_groups")

@@ -175,23 +175,42 @@ def test_outer_unbounded_requires_time_columns(spark):
         unbounded_stream_join(ls, ls, on="value", how="full")
 
 
+def _one_key_group(spark):
+    """a-values for the key tuples (a1,x) (a1,y) (a2,x) (a3,z) (a4,q), all
+    hashed into ONE key group, so a single invocation serves them all."""
+    from pyspark.sql import functions as F
+
+    from flink_1_8_sourcecode_spark.streaming.arrow_state import key_group
+
+    cand = spark.range(1, 20000).select(F.col("id").alias("a")).crossJoin(
+        spark.createDataFrame([(b,) for b in "xyzq"], "b string")
+    ).select("a", "b", key_group("a", "b").alias("g"))
+    g0 = cand.filter((F.col("a") == 1) & (F.col("b") == "x")).first()["g"]
+    same = cand.filter(F.col("g") == g0).toPandas()
+    by_b = {b: sorted(same.a[same.b == b]) for b in "xyzq"}
+    a1 = min(set(by_b["x"]) & set(by_b["y"]))
+    a2 = next(a for a in by_b["x"] if a != a1)
+    return a1, a2, by_b["z"][0], by_b["q"][0]
+
+
 def test_outer_unbounded_multi_key_and_small_buckets(spark, tmp_path):
-    """Composite join keys through the key-grouped state path, with
-    key_buckets=2 so multiple distinct key tuples share one bucket
-    invocation — the keyed merges must still pair and pad per key."""
+    """Composite join keys through the key-grouped state path, with the
+    key tuples chosen so all of them share one key group invocation —
+    the keyed merges must still pair and pad per key."""
     l_schema = "a long, b string, lts timestamp, lv double"
     r_schema = "a long, b string, rts timestamp, rv double"
+    a1, a2, a3, a4 = _one_key_group(spark)
     lrows = [
-        (1, "x", _t(0), 10.0),
-        (1, "y", _t(1), 11.0),   # left-only (b differs)
-        (2, "x", _t(2), 20.0),
-        (3, "z", _t(3), 30.0),   # left-only key
+        (a1, "x", _t(0), 10.0),
+        (a1, "y", _t(1), 11.0),   # left-only (b differs)
+        (a2, "x", _t(2), 20.0),
+        (a3, "z", _t(3), 30.0),   # left-only key
     ]
     rrows = [
-        (1, "x", _t(4), 100.0),
-        (2, "x", _t(5), 200.0),
-        (2, "x", _t(6), 201.0),
-        (9, "q", _t(7), 900.0),  # right-only key
+        (a1, "x", _t(4), 100.0),
+        (a2, "x", _t(5), 200.0),
+        (a2, "x", _t(6), 201.0),
+        (a4, "q", _t(7), 900.0),  # right-only key
     ]
     sent_l = (999, "s", _t(60 * 24 * 30), 0.0)
     sent_r = (998, "s", _t(60 * 24 * 30), 0.0)
@@ -205,7 +224,6 @@ def test_outer_unbounded_multi_key_and_small_buckets(spark, tmp_path):
     out = unbounded_stream_join(
         ls, rs, on=["a", "b"], how="full", left_time="lts", right_time="rts",
         watermark_delay="2 hours", idle_state_ttl_seconds=3600.0,
-        key_buckets=2,
     )
     q = out.writeStream.format("memory").queryName("t_unb_mk").outputMode("append").start()
     try:
@@ -213,7 +231,7 @@ def test_outer_unbounded_multi_key_and_small_buckets(spark, tmp_path):
     finally:
         q.stop()
     got = spark.table("t_unb_mk").toPandas()
-    got = got[got.a < 900].reset_index(drop=True)
+    got = got[got.b != "s"].reset_index(drop=True)
 
     lb = spark.createDataFrame(lrows, l_schema)
     rb = spark.createDataFrame(rrows, r_schema)
