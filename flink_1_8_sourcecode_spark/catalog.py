@@ -168,13 +168,3 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
         # 2^53).  Matches DuckDB's ns->us cast semantics.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (SQL entry point)."""
-    for t in TABLES:
-        table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -280,7 +280,9 @@ class Pattern:
 
     # -- pattern modifiers --------------------------------------------
     def within(self, duration: str) -> "Pattern":
-        return replace(self, within_seconds=_parse_duration(duration))
+        from flink_1_8_sourcecode_spark.streaming.stateful import _interval_seconds
+
+        return replace(self, within_seconds=_interval_seconds(duration))
 
     def with_skip(
         self, strategy: str, stage: str | None = None, throw_on_miss: bool = False
@@ -329,16 +331,3 @@ class Pattern:
                 f"skip target stage {self.skip_stage!r} is not a pattern stage"
             )
         return self
-
-
-_DUR_UNITS = {
-    "second": 1.0, "seconds": 1.0, "sec": 1.0, "s": 1.0,
-    "minute": 60.0, "minutes": 60.0, "min": 60.0, "m": 60.0,
-    "hour": 3600.0, "hours": 3600.0, "h": 3600.0,
-    "day": 86400.0, "days": 86400.0, "d": 86400.0,
-}
-
-
-def _parse_duration(s: str) -> float:
-    n, unit = s.strip().split()
-    return float(n) * _DUR_UNITS[unit.lower()]

@@ -1,14 +1,14 @@
-"""Streaming CEP: the NFA matcher inside applyInPandasWithState.
+"""Streaming CEP: the NFA matcher as a keyed-state step.
 
 Reference parity: Flink's CepOperator runs the NFA over keyed state,
 emitting matches as the event-time watermark passes them
 (flink-libraries/flink-cep/.../nfa/NFA.java:85; operator
 AbstractKeyedCEPPatternOperator).  Our engine buffers each key's rows in
-GroupState and, per micro-batch, runs the same batch matcher over the
-buffer — but only for *stable* starts, i.e. rows whose full pattern
-window (``within``) has passed the current watermark, so late/out-of-
-order arrivals inside the watermark delay cannot invalidate an emitted
-match.
+keyed state (``arrow_state.run``) and, per micro-batch, runs the same
+batch matcher over the buffer — but only for *stable* starts, i.e. rows
+whose full pattern window (``within``) has passed the current watermark,
+so late/out-of-order arrivals inside the watermark delay cannot
+invalidate an emitted match.
 
 Boundedness: the pattern MUST carry ``within`` (same requirement keeps
 Flink's shared buffer bounded).  After each batch the buffer is trimmed
@@ -17,25 +17,20 @@ to rows at or after the resume point:
 - under skip_past_last, also past the last emitted match's end (those
   rows are consumed by definition of the skip strategy).
 
-State = an Arrow-IPC row buffer plus per-key (next match id, resume
-timestamp) cursors — O(rows within the watermark+within horizon), the
-same bound as Flink's NFA state.  The buffer is typed columnar (no
-pickle), kept sorted with one stable pandas sort per batch, and resume
-trims are searchsorted on the time column; rows materialize as dicts
-only for the NFA scan itself (the matcher is per-row by nature — it IS
-the NFA).  The stateful shuffle rides on Flink-style key groups
-(``arrow_state.key_group``) and one invocation serves all of a group's
-keys.
+State = a row buffer plus per-key (next match id, resume timestamp)
+cursors — O(rows within the watermark+within horizon), the same bound
+as Flink's NFA state.  The buffer is kept sorted with one stable pandas
+sort per batch, and resume trims are searchsorted on the time column;
+rows materialize as dicts only for the NFA scan itself (the matcher is
+per-row by nature — it IS the NFA).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
 from flink_1_8_sourcecode_spark.cep.matcher import _find_matches
 from flink_1_8_sourcecode_spark.cep.pattern import Pattern
@@ -66,10 +61,8 @@ def match_pattern_stream(
     the timeout decision final by construction.
 
     Keys are sharded into Flink-style key groups
-    (``arrow_state.key_group``, KeyGroupRangeAssignment.java): one
-    invocation per group per micro-batch runs the NFA for all of the
-    group's keys, amortizing the per-invocation JVM<->Python protocol
-    cost.
+    (``arrow_state.key_group``): one invocation per group per
+    micro-batch runs the NFA for all of the group's keys.
 
     ``match_reducer`` folds each completed match into ONE output row
     before it leaves Python (streaming MATCH_RECOGNIZE's ONE ROW PER
@@ -102,20 +95,7 @@ def match_pattern_stream(
     timeout_schema = ", timed_out boolean" if emit_timeouts else ""
     if match_reducer is not None:
         out_schema = reduced_schema
-        # field-name extraction must respect nesting: decimal(10,2) /
-        # struct<...> / map<...> DDL contains commas of their own
-        out_cols = []
-        depth, cur = 0, []
-        for ch in reduced_schema + ",":
-            if ch in "(<":
-                depth += 1
-            elif ch in ")>":
-                depth -= 1
-            if ch == "," and depth == 0:
-                out_cols.append("".join(cur).strip().split()[0])
-                cur = []
-            else:
-                cur.append(ch)
+        out_cols = StructType.fromDDL(reduced_schema).names
     else:
         out_schema = (
             f"{key} {key_t}, match_id long, stage string, seq int"
@@ -131,26 +111,14 @@ def match_pattern_stream(
 
     meta_cols = [key, "__next_id", "__resume"]
 
-    def fn(_kg, batches: Iterator[pd.DataFrame], state: GroupState):
+    def step(_kg, frames, batch, wm_ms, _timed_out):
         # buf = typed row frame with a __t seconds column, kept sorted by
         # (key, __t, tiebreak); per-key (next_id, resume) cursors live in
-        # an Arrow meta frame — state rides as Arrow IPC, never pickle
-        if state.exists:
-            buf_blob, meta_blob = state.get
-            parts = [arrow_state.de(bytes(buf_blob), buf_cols)]
-            meta = arrow_state.de(bytes(meta_blob), meta_cols)
-        else:
-            parts, meta = [], pd.DataFrame(columns=meta_cols)
-        for pdf in batches:
-            p = pdf[buf_cols[1:]].copy()
-            p.insert(
-                0, "__t",
-                pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6,
-            )
-            parts.append(p)
-        buf = arrow_state.concat(parts, buf_cols)
-
-        wm_ms = state.getCurrentWatermarkMs()
+        # the meta frame
+        meta = frames["meta"]
+        arrived = batch[buf_cols[1:]].copy()
+        arrived.insert(0, "__t", arrow_state.epoch_us(batch[time_col]) / 1e6)
+        buf = arrow_state.concat([frames["buf"], arrived], buf_cols)
         stable_limit = wm_ms / 1000.0 - within
 
         # per-key cursors: next_id survives a drained buffer so match ids
@@ -237,26 +205,16 @@ def match_pattern_stream(
             },
             columns=meta_cols,
         )
-        state.update((
-            arrow_state.ser(buf.reset_index(drop=True)),
-            arrow_state.ser(meta),
-        ))
+        # Event-time timer at the earliest buffered row + within: the
+        # group re-fires when its oldest pending start stabilizes even
+        # if no further events arrive (Flink's CEP cleanup timer parity).
+        timer_ms = None
         if len(buf):
-            # Event-time timer at the earliest buffered row + within: the
-            # group re-fires when its oldest pending start stabilizes even
-            # if no further events arrive (Flink's CEP cleanup timer parity).
-            earliest = float(buf["__t"].min())
-            state.setTimeoutTimestamp(
-                max(int((earliest + within) * 1000) + 1, wm_ms + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_cols)
+            timer_ms = int((float(buf["__t"].min()) + within) * 1000) + 1
+        out = pd.DataFrame(out_rows, columns=out_cols) if out_rows else None
+        return {"buf": buf, "meta": meta}, out, timer_ms
 
     grouped = src.withColumn("__kg", arrow_state.key_group(key)).groupBy("__kg")
-    return grouped.applyInPandasWithState(
-        fn,
-        out_schema,
-        "buf binary, meta binary",
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return arrow_state.run(
+        grouped, step, out_schema, state=(("buf", buf_cols), ("meta", meta_cols)),
     )

@@ -6,9 +6,9 @@ Scale design:
   deterministically (min of a tie-break column) so results are stable —
   ``dropDuplicates`` keeps an arbitrary row and is only used where the
   caller doesn't care.
-- MinHash: signatures are pure Column expressions (md5-based hash family
-  — lexicographic min over hex digests), so signature computation is a
-  map-only stage.  LSH banding turns the O(n^2) pair space into a
+- MinHash: one md5 per shingle and an affine hash family
+  (``minhash_band_rows``), with map-side partial minima, so signatures
+  cost one small shuffle.  LSH banding turns the O(n^2) pair space into a
   self-join on (band_id, band_hash) — the standard shuffle-friendly
   reduction; candidate verification happens only inside buckets.
 - SimHash: 32-bit fingerprint from per-token md5 bits, map-only.
@@ -44,26 +44,6 @@ def exact_dedup(df: DataFrame, keys: list[str], keep_by: str) -> DataFrame:
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_k: int = 3) -> Column:
-    """MinHash signature as an array of hex-digest minima.
-
-    Hash family i = md5(i || '|' || shingle); min is lexicographic over
-    the hex strings — engine-portable (md5 is identical everywhere) and
-    a valid min-wise family.
-    """
-    sh = shingles(text, shingle_k)
-
-    # NB: capture the seed via a closure factory — a `lambda s, i=i:` default
-    # arg would make PySpark treat the HOF lambda as two-parameter and bind
-    # the second parameter to the array index Column.
-    def seeded(i: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, seeded(i))) for i in range(num_hashes)]
     )
 
 

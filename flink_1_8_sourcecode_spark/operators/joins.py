@@ -575,10 +575,8 @@ def unbounded_stream_join(
     key re-arrival gap).
 
     Join keys are sharded into Flink-style key groups
-    (``streaming/arrow_state.key_group``, KeyGroupRangeAssignment.java):
-    each invocation handles all of a group's keys with keyed pandas
-    merges — amortizing the per-invocation JVM<->Python protocol cost
-    that dominates at high key cardinality.
+    (``streaming/arrow_state``): each invocation handles all of a
+    group's keys with keyed pandas merges.
     """
     keys = [on] if isinstance(on, str) else list(on)
     if how == "inner":
@@ -601,6 +599,66 @@ def unbounded_stream_join(
     )
 
 
+def _stream_join_input(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    lcols: list[str],
+    rcols: list[str],
+    left_time: str,
+    right_time: str,
+    watermark_delay: str,
+):
+    """Both inputs of a stateful stream join as ONE keyed stream, grouped
+    by key group: each side projects to the same wide schema (keys,
+    ``__ts``, ``__side`` 0/1, its own payload native, the other side's
+    payload null-cast), so every value stays typed end to end.  The
+    watermark goes on the post-projection ``__ts`` column — the tag does
+    not survive an alias.
+
+    Returns ``(grouped, out_cols, out_schema, finish)``; ``finish`` gives a
+    pandas result frame the output column order and timestamp dtypes.
+    """
+    import pandas as pd
+
+    from flink_1_8_sourcecode_spark.streaming import arrow_state
+
+    overlap = set(lcols) & set(rcols)
+    if overlap:
+        raise ValueError(f"non-key columns must be disjoint, both sides have {overlap}")
+
+    def ddl(df: DataFrame, cols: list[str]) -> list[tuple[str, str]]:
+        return [(c, df.schema[c].dataType.simpleString()) for c in cols]
+
+    l_ddl, r_ddl = ddl(left, lcols), ddl(right, rcols)
+    fields = ddl(left, keys) + l_ddl + r_ddl
+    out_cols = [c for c, _t in fields]
+    ts_cols = [c for c, t in l_ddl + r_ddl if t.startswith("timestamp")]
+
+    def tag(df: DataFrame, time_col: str, side: int, own: list[str], other) -> DataFrame:
+        return df.select(
+            *[F.col(k) for k in keys],
+            F.col(time_col).cast("timestamp").alias("__ts"),
+            F.lit(side).alias("__side"),
+            *[F.col(c) for c in own],
+            *[F.lit(None).cast(t).alias(c) for c, t in other],
+        ).withWatermark("__ts", watermark_delay)
+
+    grouped = (
+        tag(left, left_time, 0, lcols, r_ddl)
+        .unionByName(tag(right, right_time, 1, rcols, l_ddl))
+        .withColumn("__kg", arrow_state.key_group(*keys))
+        .groupBy("__kg")
+    )
+
+    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
+        for c in ts_cols:
+            pdf[c] = pd.to_datetime(pdf[c])  # None -> NaT, dtype datetime64
+        return pdf.reindex(columns=out_cols)
+
+    return grouped, out_cols, ", ".join(f"{c} {t}" for c, t in fields), finish
+
+
 def _outer_unbounded_join(
     left: DataFrame,
     right: DataFrame,
@@ -616,14 +674,10 @@ def _outer_unbounded_join(
     disjoint (alias before joining, as in SQL).
 
     Implementation notes (hot-path discipline):
-    - payload columns travel as NATIVE Spark columns (the other side's
-      columns null-cast before the union) — no JSON round-trip;
-    - the stateful shuffle is on a KEY GROUP (``arrow_state.key_group``):
-      one applyInPandasWithState invocation per group per micro-batch
-      holds every key of the group, so the JVM<->Python protocol cost
-      amortizes across keys (Flink's KeyGroupRangeAssignment design);
-    - buffered state is Arrow-IPC-serialized pandas frames carrying the
-      key columns, not pickled Python lists;
+    - payload columns travel as NATIVE Spark columns
+      (``_stream_join_input``) — no JSON round-trip;
+    - state is one frame per side plus a per-key deadline frame, keyed
+      by the join keys, in ``arrow_state.run``'s key groups;
     - per-batch matching is vectorized keyed pandas merges: the new
       pairs of a batch are exactly new_left >< all_right + old_left ><
       new_right ON the join keys, no per-row Python loop;
@@ -636,59 +690,21 @@ def _outer_unbounded_join(
       passes their deadline; the group timer is armed at the earliest
       pending deadline.
     """
-    from collections.abc import Iterator
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from flink_1_8_sourcecode_spark.streaming import arrow_state
 
     lcols = [c for c in left.columns if c not in keys]
     rcols = [c for c in right.columns if c not in keys]
-    overlap = set(lcols) & set(rcols)
-    if overlap:
-        raise ValueError(f"non-key columns must be disjoint, both sides have {overlap}")
-
-    def _ddl(df: DataFrame, cols: list[str]) -> list[tuple[str, str]]:
-        return [(c, df.schema[c].dataType.simpleString()) for c in cols]
-
-    key_ddl = _ddl(left, keys)
-    l_ddl, r_ddl = _ddl(left, lcols), _ddl(right, rcols)
-    out_cols = [c for c, _t in key_ddl + l_ddl + r_ddl]
-    out_schema = ", ".join(f"{c} {t}" for c, t in key_ddl + l_ddl + r_ddl)
-    ts_cols = {c for c, t in l_ddl + r_ddl if t.startswith("timestamp")}
+    grouped, out_cols, out_schema, finish = _stream_join_input(
+        left, right, keys, lcols, rcols, left_time, right_time, watermark_delay
+    )
     lbuf_cols = keys + lcols
     rbuf_cols = keys + rcols
     meta_cols = keys + ["__deadline"]
 
-    def _tag(df: DataFrame, time_col: str, side: int) -> DataFrame:
-        # Both sides project to the SAME wide schema (own payload native,
-        # other side's columns null-cast) so the union keeps every value
-        # typed end-to-end.  Watermark goes on the post-projection __ts
-        # column — the tag does not survive an alias.
-        own = lcols if side == 0 else rcols
-        other = r_ddl if side == 0 else l_ddl
-        return df.select(
-            *[F.col(k) for k in keys],
-            F.col(time_col).cast("timestamp").alias("__ts"),
-            F.lit(side).alias("__side"),
-            *[F.col(c) for c in own],
-            *[F.lit(None).cast(t).alias(c) for c, t in other],
-        ).withWatermark("__ts", watermark_delay)
-
-    u = (
-        _tag(left, left_time, 0)
-        .unionByName(_tag(right, right_time, 1))
-        .withColumn("__kg", arrow_state.key_group(*keys))
-    )
-
     _concat = arrow_state.concat
     ttl_ms = int(idle_state_ttl_seconds * 1000)
-
-    def _finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        for c in ts_cols:
-            pdf[c] = pd.to_datetime(pdf[c])  # None -> NaT, dtype datetime64
-        return pdf.reindex(columns=out_cols)
 
     def _anti(df: pd.DataFrame, key_df: pd.DataFrame) -> pd.DataFrame:
         """Rows of df whose key tuple is NOT in key_df."""
@@ -703,37 +719,17 @@ def _outer_unbounded_join(
             return df.iloc[0:0]
         return df.merge(key_df, on=keys)
 
-    def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            lbuf, rbuf, mbuf = state.get
-            old_l = arrow_state.de(bytes(lbuf), lbuf_cols)
-            old_r = arrow_state.de(bytes(rbuf), rbuf_cols)
-            meta = arrow_state.de(bytes(mbuf), meta_cols)
-        else:
-            old_l = pd.DataFrame(columns=lbuf_cols)
-            old_r = pd.DataFrame(columns=rbuf_cols)
-            meta = pd.DataFrame(columns=meta_cols)
-        wm = state.getCurrentWatermarkMs()
-
-        new_l_parts: list[pd.DataFrame] = []
-        new_r_parts: list[pd.DataFrame] = []
-        ts_parts: list[pd.DataFrame] = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ts_ms = pdf["__ts"].astype("datetime64[us]").astype("int64") // 1000
-            ts_parts.append(pdf[keys].assign(__t=ts_ms))
-            new_l_parts.append(pdf.loc[pdf["__side"] == 0, lbuf_cols])
-            new_r_parts.append(pdf.loc[pdf["__side"] == 1, rbuf_cols])
-        new_l = _concat(new_l_parts, lbuf_cols)
-        new_r = _concat(new_r_parts, rbuf_cols)
+    def step(_kg, frames, batch, wm, _timed_out):
+        old_l, old_r, meta = frames["lbuf"], frames["rbuf"], frames["meta"]
+        new_l = batch.loc[batch["__side"] == 0, lbuf_cols]
+        new_r = batch.loc[batch["__side"] == 1, rbuf_cols]
         all_l = _concat([old_l, new_l], lbuf_cols)
         all_r = _concat([old_r, new_r], rbuf_cols)
 
-        if ts_parts:
+        if len(batch):
             # refresh the deadline of every key touched this batch
             touched = (
-                _concat(ts_parts, keys + ["__t"])
+                batch[keys].assign(__t=arrow_state.epoch_us(batch["__ts"]) // 1000)
                 .groupby(keys, as_index=False)["__t"].max()
             )
             touched["__deadline"] = (
@@ -773,24 +769,15 @@ def _outer_unbounded_join(
                             pad[c] = None
                         out = _concat([out, pad], out_cols)
 
-        if len(meta):
-            state.update((
-                arrow_state.ser(all_l.reset_index(drop=True)),
-                arrow_state.ser(all_r.reset_index(drop=True)),
-                arrow_state.ser(meta.reset_index(drop=True)),
-            ))
-            state.setTimeoutTimestamp(
-                max(int(meta["__deadline"].astype("int64").min()), wm + 1)
-            )
-        elif state.exists:
-            state.remove()
+        # every buffered row's key has a deadline, so an empty meta frame
+        # means empty buffers and the group's state is dropped
+        timer_ms = int(meta["__deadline"].astype("int64").min()) if len(meta) else None
+        frames = {"lbuf": all_l, "rbuf": all_r, "meta": meta}
+        return frames, finish(out) if len(out) else None, timer_ms
 
-        if len(out):
-            yield _finish(out)
-
-    return u.groupBy("__kg").applyInPandasWithState(
-        fn, out_schema, "lbuf binary, rbuf binary, meta binary", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return arrow_state.run(
+        grouped, step, out_schema,
+        state=(("lbuf", lbuf_cols), ("rbuf", rbuf_cols), ("meta", meta_cols)),
     )
 
 
@@ -824,8 +811,7 @@ def temporal_join_stream(
     emitted probes leave state; versions older than the latest one
     at-or-before the watermark are dropped (every future probe has
     ``ts > watermark``, so only that latest version can still win).
-    The stateful shuffle is on a key group (``arrow_state.key_group``)
-    with keyed pandas merges per group — the same amortization as
+    Keyed pandas merges per key group, as in
     ``unbounded_stream_join``.  Scale: per-key state is
     one pending-probe window plus one pruned version chain, the same
     bound as the reference's keyed MapState.
@@ -839,10 +825,7 @@ def temporal_join_stream(
     withIdleStateRetentionTime makes.  Size it above the longest
     probe-silence per key you must serve.
     """
-    from collections.abc import Iterator
-
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from flink_1_8_sourcecode_spark.streaming import arrow_state
 
@@ -853,71 +836,24 @@ def temporal_join_stream(
         c for c in versioned.columns if c not in keys + [version_time]
     ]
     lcols = [c for c in probe.columns if c not in keys]
-    overlap = set(lcols) & set(right_cols)
-    if overlap:
-        raise ValueError(f"non-key columns must be disjoint, both sides have {overlap}")
-
-    def _ddl(df: DataFrame, cols: list[str]) -> list[tuple[str, str]]:
-        return [(c, df.schema[c].dataType.simpleString()) for c in cols]
-
-    key_ddl = _ddl(probe, keys)
-    l_ddl = _ddl(probe, lcols)
-    r_ddl = _ddl(versioned, right_cols)
-    out_cols = [c for c, _t in key_ddl + l_ddl + r_ddl]
-    out_schema = ", ".join(f"{c} {t}" for c, t in key_ddl + l_ddl + r_ddl)
-    ts_cols = {c for c, t in l_ddl + r_ddl if t.startswith("timestamp")}
+    grouped, _out_cols, out_schema, finish = _stream_join_input(
+        probe, versioned, keys, lcols, right_cols, probe_time, version_time,
+        watermark_delay,
+    )
     pbuf_cols = keys + lcols + ["__t"]
     vbuf_cols = keys + right_cols + ["__t"]
-
-    def _tag(df: DataFrame, time_col: str, side: int) -> DataFrame:
-        own = lcols if side == 0 else right_cols
-        other = r_ddl if side == 0 else l_ddl
-        return df.select(
-            *[F.col(k) for k in keys],
-            F.col(time_col).cast("timestamp").alias("__ts"),
-            F.lit(side).alias("__side"),
-            *[F.col(c) for c in own],
-            *[F.lit(None).cast(t).alias(c) for c, t in other],
-        ).withWatermark("__ts", watermark_delay)
-
-    u = (
-        _tag(probe, probe_time, 0)
-        .unionByName(_tag(versioned, version_time, 1))
-        .withColumn("__kg", arrow_state.key_group(*keys))
-    )
-
-    _concat = arrow_state.concat
     ttl_ms = (
         None if version_ttl_seconds is None else int(version_ttl_seconds * 1000)
     )
 
-    def _finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        for c in ts_cols:
-            pdf[c] = pd.to_datetime(pdf[c])
-        return pdf.reindex(columns=out_cols)
-
-    def fn(key_tuple, batches: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            pb, vb = state.get
-            pend = arrow_state.de(bytes(pb), pbuf_cols)
-            vers = arrow_state.de(bytes(vb), vbuf_cols)
-        else:
-            pend = pd.DataFrame(columns=pbuf_cols)
-            vers = pd.DataFrame(columns=vbuf_cols)
-        wm = state.getCurrentWatermarkMs()
-
-        new_p: list[pd.DataFrame] = []
-        new_v: list[pd.DataFrame] = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.assign(
-                __t=pdf["__ts"].astype("datetime64[us]").astype("int64") // 1000
-            )
-            new_p.append(pdf.loc[pdf["__side"] == 0, pbuf_cols])
-            new_v.append(pdf.loc[pdf["__side"] == 1, vbuf_cols])
-        pend = _concat([pend] + new_p, pbuf_cols)
-        vers = _concat([vers] + new_v, vbuf_cols)
+    def step(_kg, frames, batch, wm, _timed_out):
+        batch = batch.assign(__t=arrow_state.epoch_us(batch["__ts"]) // 1000)
+        pend = arrow_state.concat(
+            [frames["pbuf"], batch.loc[batch["__side"] == 0, pbuf_cols]], pbuf_cols
+        )
+        vers = arrow_state.concat(
+            [frames["vbuf"], batch.loc[batch["__side"] == 1, vbuf_cols]], vbuf_cols
+        )
 
         # probes whose event time the watermark has passed are FINAL:
         # any version at-or-before them has already arrived
@@ -956,6 +892,7 @@ def temporal_join_stream(
                 for c in right_cols:
                     out[c] = out[c].astype(object)
                     out.loc[miss, c] = None
+            out = finish(out) if len(out) else None
 
         # version-chain pruning: keep everything past the watermark plus
         # the single latest version at-or-before it (per key); with a
@@ -968,36 +905,23 @@ def temporal_join_stream(
                 below = below.groupby(keys, as_index=False).tail(1)
                 if ttl_ms is not None:
                     below = below[below["__t"].astype("int64") > wm - ttl_ms]
-            vers = _concat(
+            vers = arrow_state.concat(
                 [below, vv[vv["__t"].astype("int64") > wm]], vbuf_cols
             )
 
-        if len(pend) or len(vers):
-            state.update((
-                arrow_state.ser(pend.reset_index(drop=True)),
-                arrow_state.ser(vers.reset_index(drop=True)),
-            ))
-            if len(pend):
-                # wake exactly when the earliest pending probe stabilizes
-                state.setTimeoutTimestamp(
-                    max(int(pend["__t"].astype("int64").min()), wm + 1)
-                )
-            elif ttl_ms is not None and len(vers):
-                # no probes pending: wake when the oldest retained
-                # version's TTL expires so dead-key state clears even
-                # if the group never sees data again
-                state.setTimeoutTimestamp(
-                    max(int(vers["__t"].astype("int64").min()) + ttl_ms, wm + 1)
-                )
-        elif state.exists:
-            state.remove()
+        timer_ms = None
+        if len(pend):
+            # wake exactly when the earliest pending probe stabilizes
+            timer_ms = int(pend["__t"].astype("int64").min())
+        elif ttl_ms is not None and len(vers):
+            # no probes pending: wake when the oldest retained version's
+            # TTL expires so dead-key state clears even if the group
+            # never sees data again
+            timer_ms = int(vers["__t"].astype("int64").min()) + ttl_ms
+        return {"pbuf": pend, "vbuf": vers}, out, timer_ms
 
-        if out is not None and len(out):
-            yield _finish(out)
-
-    return u.groupBy("__kg").applyInPandasWithState(
-        fn, out_schema, "pbuf binary, vbuf binary", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return arrow_state.run(
+        grouped, step, out_schema, state=(("pbuf", pbuf_cols), ("vbuf", vbuf_cols)),
     )
 
 

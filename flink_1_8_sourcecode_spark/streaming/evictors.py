@@ -12,23 +12,18 @@ state stays bounded at ``n`` elements (count evictor) or one time-span
 here) applies to the survivors when the global watermark closes the
 window — evict-before-apply, the reference default (``doEvictAfter=false``).
 
-Scale notes: the stateful shuffle is on Flink-style key groups
-(``arrow_state.key_group`` — see ``triggers.py`` module docstring); the
-element buffer rides as an Arrow frame with the key in its own Spark
-type (``arrow_state.ser``/``de``); eviction is vectorized numpy — a
-lexsort per group-batch plus boolean masks, no per-element Python.  The
+Scale notes: ``evicted_tumble_agg`` is a per-key-group step driven by
+``arrow_state.run``; eviction is vectorized numpy — a lexsort per
+group-batch plus boolean masks, no per-element Python.  The
 user-supplied ``delta_fn`` is tried on whole numpy arrays first and
 falls back to per-element calls only if it is not vectorizable.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_1_8_sourcecode_spark.streaming import arrow_state
 
@@ -86,25 +81,20 @@ def evicted_tumble_agg(
             pass
         return np.array([delta_fn(float(x), last_v) < param for x in varr], dtype=bool)
 
-    def fn(_kg, batches: Iterator[pd.DataFrame], state: GroupState):
-        # element buffer rides as an Arrow frame of (key, ws, t, v); the
-        # numpy work below runs on a float (n, 4) matrix whose first
-        # column is the key's dense code into ``uniq``
-        parts = [arrow_state.de(bytes(state.get[0]), buf_cols)] if state.exists else []
-        wm = state.getCurrentWatermarkMs() / 1000.0
-
-        for pdf in batches:
-            t = pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-            v = pdf[value_col].astype(float).to_numpy()
-            ws = t - np.mod(t, window_seconds)
-            live = ws + window_seconds > wm  # behind-watermark: window already fired
-            if live.any():
-                parts.append(pd.DataFrame({
-                    "k": pdf[key_name].to_numpy()[live],
-                    "ws": ws[live], "t": t[live], "v": v[live],
-                }))
-
-        frame = arrow_state.concat(parts, buf_cols)
+    def step(_kg, frames, batch, wm_ms, _timed_out):
+        # the element buffer is a frame of (key, ws, t, v); the numpy work
+        # below runs on a float (n, 4) matrix whose first column is the
+        # key's dense code into ``uniq``
+        wm = wm_ms / 1000.0
+        t = arrow_state.epoch_us(batch[time_col]) / 1e6
+        v = batch[value_col].astype(float).to_numpy()
+        ws = t - np.mod(t, window_seconds)
+        live = ws + window_seconds > wm  # behind-watermark: window already fired
+        arrived = pd.DataFrame({
+            "k": batch[key_name].to_numpy()[live],
+            "ws": ws[live], "t": t[live], "v": v[live],
+        })
+        frame = arrow_state.concat([frames["buf"], arrived], buf_cols)
         codes, uniq = pd.factorize(frame["k"], use_na_sentinel=False)
         buf = np.column_stack(
             [codes] + [frame[c].to_numpy(dtype=np.float64) for c in buf_cols[1:]]
@@ -151,20 +141,10 @@ def evicted_tumble_agg(
                         (uniq[int(fired[s, 0])], float(fired[s, 1]), len(varr), float(varr.sum()))
                     )
 
-        if len(buf):
-            state.update((arrow_state.ser(pd.DataFrame({
-                "k": uniq.take(buf[:, 0].astype(np.int64)),
-                "ws": buf[:, 1], "t": buf[:, 2], "v": buf[:, 3],
-            })),))
-            target_ms = int((buf[:, 1].min() + window_seconds) * 1000)
-            state.setTimeoutTimestamp(max(target_ms, int(wm * 1000) + 1))
-        elif state.exists:
-            # no open windows: drop the group's state entry entirely so
-            # state stays bounded by ACTIVE keys, not all keys ever seen
-            state.remove()
+        out = None
         if out_rows:
             u_arr, ws_arr, cnt_arr, tot_arr = zip(*out_rows)
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_name: list(u_arr),
                     "w_start": pd.to_datetime(np.array(ws_arr), unit="s"),
@@ -172,12 +152,18 @@ def evicted_tumble_agg(
                     "total": np.array(tot_arr, dtype="float64"),
                 }
             )
+        # a group with no open window drops its state, so state stays
+        # bounded by ACTIVE keys, not all keys ever seen
+        kept = pd.DataFrame({
+            "k": uniq.take(buf[:, 0].astype(np.int64)),
+            "ws": buf[:, 1], "t": buf[:, 2], "v": buf[:, 3],
+        })
+        timer_ms = int((buf[:, 1].min() + window_seconds) * 1000) if len(buf) else None
+        return {"buf": kept}, out, timer_ms
 
     grouped = (
         df.withWatermark(time_col, watermark_delay)
         .withColumn("__kg", arrow_state.key_group(key))
         .groupBy("__kg")
     )
-    return grouped.applyInPandasWithState(
-        fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return arrow_state.run(grouped, step, out_schema, state=(("buf", buf_cols),))

@@ -17,6 +17,9 @@ Reference parity:
 
 from __future__ import annotations
 
+import datetime as dt
+import json
+import os
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 
@@ -109,6 +112,70 @@ def broadcast_state_join(
     return w
 
 
+class _CutoffLog:
+    """The routing cutoff of a foreachBatch side channel, kept beside the
+    checkpoint as ``{"batch_id", "cutoff", "wm"}``: the last routed
+    batch, the cutoff it routed against, and the watermark it advanced
+    to (the next batch's cutoff).
+
+    Spark re-runs the last batch if it crashed before writing that
+    batch's commit.  The replay routes against the stored ``cutoff``, not
+    the watermark the batch advanced itself, so every row goes to the
+    channel it went to the first time.  Without a checkpoint the log
+    lives in memory only.  A file that cannot be read fails the restart.
+    """
+
+    def __init__(self, checkpoint: str | None, name: str):
+        self.path = os.path.join(checkpoint, name) if checkpoint else None
+        self.batch_id = self.used = self.wm = None
+        if self.path and os.path.exists(self.path):
+            try:
+                with open(self.path) as f:
+                    rec = json.load(f)
+                self.batch_id = rec.get("batch_id")
+                self.used, self.wm = (
+                    None if v is None else dt.datetime.fromisoformat(v)
+                    for v in (rec.get("cutoff"), rec["wm"])
+                )
+            except (OSError, ValueError, KeyError, TypeError, AttributeError) as exc:
+                raise ValueError(
+                    f"cannot restore the side-channel watermark from {self.path}: {exc}"
+                ) from exc
+
+    def cutoff(self, batch_id: int) -> dt.datetime | None:
+        """The cutoff batch ``batch_id`` routes against (None: all on time)."""
+        return self.used if batch_id == self.batch_id else self.wm
+
+    def advance(self, batch_id: int, cutoff, wm) -> None:
+        """Record that ``batch_id`` routed against ``cutoff`` and saw the
+        watermark candidate ``wm``; the watermark never moves back."""
+        if wm is None or (cutoff is not None and wm <= cutoff):
+            wm = cutoff
+        self.batch_id, self.used, self.wm = batch_id, cutoff, wm
+        if self.path is None:
+            return
+        os.makedirs(os.path.dirname(self.path), exist_ok=True)
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(
+                {
+                    "batch_id": batch_id,
+                    "cutoff": None if cutoff is None else cutoff.isoformat(),
+                    "wm": None if wm is None else wm.isoformat(),
+                },
+                f,
+            )
+        os.replace(tmp, self.path)
+
+
+def _split_at(df: DataFrame, time_col: str, cutoff) -> tuple[DataFrame, DataFrame]:
+    """(rows behind ``cutoff``, rows at or after it); all on time if None."""
+    if cutoff is None:
+        return df.limit(0), df
+    t = F.col(time_col)
+    return df.filter(t < F.lit(cutoff)), df.filter(t >= F.lit(cutoff))
+
+
 def late_data_side_channel(
     df: DataFrame,
     time_col: str,
@@ -128,68 +195,30 @@ def late_data_side_channel(
     inside ``main_fn`` (per-batch) or downstream of the main sink.
 
     The high-watermark is persisted beside the checkpoint location
-    (``<checkpoint>/_late_wm.json``) so a query restarted from its
-    checkpoint resumes with the prior watermark instead of silently
-    routing genuinely-late rows to ``main_fn``.  Without a checkpoint
-    the watermark is in-memory only (documented restart limitation;
-    requires a driver-visible filesystem path).
+    (``<checkpoint>/_late_wm.json``, see ``_CutoffLog``) so a query
+    restarted from its checkpoint resumes with the prior watermark
+    instead of silently routing genuinely-late rows to ``main_fn``, and
+    a replayed batch routes as it did the first time.  Without a
+    checkpoint the watermark is in-memory only (documented restart
+    limitation; requires a driver-visible filesystem path).  ``delay``
+    is seconds or an "N unit" string.
     """
-    import datetime as _dt
-    import json as _json
-    import os as _os
+    from flink_1_8_sourcecode_spark.streaming.stateful import _interval_seconds
 
-    from pyspark.sql import functions as _F
-
-    if isinstance(delay, str):
-        n, unit = delay.split()
-        seconds = float(n) * {"second": 1, "seconds": 1, "minute": 60, "minutes": 60,
-                              "hour": 3600, "hours": 3600, "day": 86400, "days": 86400}[unit]
-    else:
-        seconds = float(delay)
-    wm_path = _os.path.join(checkpoint, "_late_wm.json") if checkpoint else None
-    hwm: dict[str, _dt.datetime] = {}
-    if wm_path and _os.path.exists(wm_path):
-        try:
-            with open(wm_path) as f:
-                hwm["wm"] = _dt.datetime.fromisoformat(_json.load(f)["wm"])
-        except (OSError, ValueError, KeyError) as exc:
-            # a corrupt/unreadable watermark file degrades to a cold
-            # start (late rows may route to main once) — say so rather
-            # than silently losing the recovery guarantee
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "could not restore late-watermark from %s (%s); starting cold",
-                wm_path, exc,
-            )
-
-    def _persist_wm(wm: _dt.datetime) -> None:
-        if wm_path is None:
-            return
-        _os.makedirs(_os.path.dirname(wm_path), exist_ok=True)
-        tmp = wm_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({"wm": wm.isoformat()}, f)
-        _os.replace(tmp, wm_path)
+    lag = dt.timedelta(
+        seconds=_interval_seconds(delay) if isinstance(delay, str) else float(delay)
+    )
+    log = _CutoffLog(checkpoint, "_late_wm.json")
 
     def route(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
         try:
-            cutoff = hwm.get("wm")
-            if cutoff is not None:
-                late = batch.filter(_F.col(time_col) < _F.lit(cutoff))
-                on_time = batch.filter(_F.col(time_col) >= _F.lit(cutoff))
-            else:
-                late = batch.limit(0)
-                on_time = batch
+            cutoff = log.cutoff(batch_id)
+            late, on_time = _split_at(batch, time_col, cutoff)
             late_fn(late, batch_id)
             main_fn(on_time, batch_id)
-            mx = batch.agg(_F.max(time_col)).first()[0]
-            if mx is not None:
-                new_wm = mx - _dt.timedelta(seconds=seconds)
-                if cutoff is None or new_wm > cutoff:
-                    hwm["wm"] = new_wm
-                    _persist_wm(new_wm)
+            mx = batch.agg(F.max(time_col)).first()[0]
+            log.advance(batch_id, cutoff, None if mx is None else mx - lag)
         finally:
             batch.unpersist()
 
@@ -241,53 +270,17 @@ def punctuated_watermark_channel(
     (persisted beside the checkpoint), data rows behind it route to
     ``late_fn``, the rest to ``main_fn``.  Markers are not forwarded.
     """
-    import datetime as _dt
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as _F
-
-    wm_path = _os.path.join(checkpoint, "_punct_wm.json") if checkpoint else None
-    hwm: dict[str, _dt.datetime] = {}
-    if wm_path and _os.path.exists(wm_path):
-        try:
-            with open(wm_path) as f:
-                hwm["wm"] = _dt.datetime.fromisoformat(_json.load(f)["wm"])
-        except (OSError, ValueError, KeyError) as exc:
-            # a corrupt/unreadable watermark file degrades to a cold
-            # start (late rows may route to main once) — say so rather
-            # than silently losing the recovery guarantee
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "could not restore late-watermark from %s (%s); starting cold",
-                wm_path, exc,
-            )
-
-    def _persist(wm: _dt.datetime) -> None:
-        if wm_path is None:
-            return
-        _os.makedirs(_os.path.dirname(wm_path), exist_ok=True)
-        tmp = wm_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({"wm": wm.isoformat()}, f)
-        _os.replace(tmp, wm_path)
+    log = _CutoffLog(checkpoint, "_punct_wm.json")
 
     def route(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
         try:
-            cutoff = hwm.get("wm")
-            data = batch.filter(~marker_pred)
-            if cutoff is not None:
-                late_fn(data.filter(_F.col(time_col) < _F.lit(cutoff)), batch_id)
-                main_fn(data.filter(_F.col(time_col) >= _F.lit(cutoff)), batch_id)
-            else:
-                late_fn(data.limit(0), batch_id)
-                main_fn(data, batch_id)
-            mx = batch.filter(marker_pred).agg(_F.max(marker_wm_col)).first()[0]
-            if mx is not None and (cutoff is None or mx > cutoff):
-                hwm["wm"] = mx
-                _persist(mx)
+            cutoff = log.cutoff(batch_id)
+            late, on_time = _split_at(batch.filter(~marker_pred), time_col, cutoff)
+            late_fn(late, batch_id)
+            main_fn(on_time, batch_id)
+            mx = batch.filter(marker_pred).agg(F.max(marker_wm_col)).first()[0]
+            log.advance(batch_id, cutoff, mx)
         finally:
             batch.unpersist()
 

@@ -1,4 +1,4 @@
-"""Custom stateful streaming operators over applyInPandasWithState.
+"""Custom stateful streaming operators.
 
 Reference parity:
 - KeyedProcessFunction + keyed state + timers
@@ -13,10 +13,13 @@ Reference parity:
 Scale notes: state is per-key and partitioned by the groupBy key — the
 same sharding as Flink's keyed state backend; Arrow batches move groups
 into pandas.  State stays small (counters/ring buffers), never whole
-groups, and buffers ride as Arrow-IPC blobs (typed, no pickle); all
-per-batch work is vectorized (stable sorts, boolean watermark splits,
-carry+cumsum running aggregates, shared ``triggers._scan_group`` firing
-math) — no per-row Python in any of these operators.
+groups.  The event-time operators (running/bounded OVER, sorted emit,
+rate limit) are per-key steps driven by ``arrow_state.run`` and share
+its watermark release; the sketch and sample operators keep typed
+``GroupState`` tuples.  All per-batch work is vectorized (stable sorts,
+boolean watermark splits, carry+cumsum running aggregates, shared
+``triggers._scan_group`` firing math) — no per-row Python in any of
+these operators.
 """
 
 from __future__ import annotations
@@ -69,8 +72,7 @@ def event_time_running_agg(
     the reference's over-window state cleanup).  Emits append-mode rows
     (key, time, tiebreak?, value, running_sum, running_cnt).
 
-    Scale notes: the pending buffer rides as an Arrow-IPC blob (typed,
-    no pickle); per batch the work is one stable sort + boolean split +
+    Scale notes: per batch the work is one stable sort + boolean split +
     cumsum — the running sums fall out of ``carry + cumsum`` with no
     per-row Python.
     """
@@ -88,62 +90,35 @@ def event_time_running_agg(
     )
     buf_cols = [time_col, *tb, value_col]
 
-    def fn(key_tuple, batches, state: GroupState):
-        if state.exists:
-            blob, total, cnt = state.get
-            parts = [arrow_state.de(bytes(blob), buf_cols)]
-        else:
-            parts, total, cnt = [], 0.0, 0
-        parts += [pdf[buf_cols] for pdf in batches]
-        pend = arrow_state.concat(parts, buf_cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
-
-        keep = pend
-        if len(pend):
-            pend = pend.sort_values([time_col, *tb], kind="stable", ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
+    def step(key_tuple, frames, batch, wm_ms, _timed_out):
+        acc = frames["acc"]
+        total, cnt = (float(acc["total"][0]), int(acc["cnt"][0])) if len(acc) else (0.0, 0)
+        pend = arrow_state.concat([frames["buf"], batch[buf_cols]], buf_cols)
+        # the timer at the earliest pending row re-invokes a key that stops
+        # receiving data (Flink's over-window registers the same timer)
+        ready, keep, timer_ms = arrow_state.release(pend, time_col, [time_col, *tb], wm_ms)
+        out = None
+        if len(ready):
+            vals = ready[value_col].astype(float).to_numpy()
+            cs = np.cumsum(vals)
+            out = pd.DataFrame(
+                {
+                    key: key_tuple[0],
+                    time_col: ready[time_col].to_numpy(),
+                    **{t: ready[t].to_numpy() for t in tb},
+                    value_col: vals,
+                    "running_sum": total + cs,
+                    "running_cnt": cnt + np.arange(1, len(vals) + 1, dtype="int64"),
+                }
             )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
-            if len(ready):
-                vals = ready[value_col].astype(float).to_numpy()
-                cs = np.cumsum(vals)
-                out = pd.DataFrame(
-                    {
-                        key: key_tuple[0],
-                        time_col: ready[time_col].to_numpy(),
-                        **{t: ready[t].to_numpy() for t in tb},
-                        value_col: vals,
-                        "running_sum": total + cs,
-                        "running_cnt": cnt + np.arange(1, len(vals) + 1, dtype="int64"),
-                    }
-                )
-                total += float(cs[-1])
-                cnt += len(vals)
-            else:
-                out = None
-        else:
-            out = None
+            total += float(cs[-1])
+            cnt += len(vals)
+        acc = pd.DataFrame({"total": [total], "cnt": [cnt]})
+        return {"buf": keep, "acc": acc}, out, timer_ms
 
-        state.update(
-            (arrow_state.ser(keep.reset_index(drop=True)), float(total), int(cnt))
-        )
-        if len(keep):
-            # Re-arm an event-time timer at the earliest pending row so the
-            # group is re-invoked when the watermark passes it — without
-            # this, a group that stops receiving data never flushes
-            # (Flink's over-window registers the same cleanup timer).
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
-            )
-            state.setTimeoutTimestamp(int(earliest) + 1)
-        if out is not None:
-            yield out
-
-    return src.groupBy(key).applyInPandasWithState(
-        fn, out_schema, "buf binary, total double, cnt long", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return arrow_state.run(
+        src.groupBy(key), step, out_schema,
+        state=(("buf", buf_cols), ("acc", ["total", "cnt"])),
     )
 
 
@@ -207,9 +182,14 @@ def count_window_agg(
 
 
 _INTERVAL_UNIT_S = {
-    "millisecond": 1e-3, "second": 1.0, "minute": 60.0, "hour": 3600.0,
-    "day": 86400.0, "week": 604800.0,
+    **dict.fromkeys(("millisecond", "milliseconds"), 1e-3),
+    **dict.fromkeys(("s", "sec", "second", "seconds"), 1.0),
+    **dict.fromkeys(("m", "min", "minute", "minutes"), 60.0),
+    **dict.fromkeys(("h", "hour", "hours"), 3600.0),
+    **dict.fromkeys(("d", "day", "days"), 86400.0),
+    **dict.fromkeys(("week", "weeks"), 604800.0),
 }
+_INTERVAL_PART = r"(\d+(?:\.\d+)?(?:e[-+]?\d+)?)\s*([a-z]+)"
 
 # "auto" ROWS idle retention: 30 event-time days, floored at 100x the
 # declared disorder bound — two orders of magnitude beyond the contract
@@ -218,16 +198,21 @@ AUTO_IDLE_RETENTION_DELAY_FACTOR = 100.0
 
 
 def _interval_seconds(delay: str) -> float:
-    """Seconds in a Spark watermark-delay interval string — single
-    (``"30 minutes"``) or compound (``"1 hour 30 minutes"``), the same
-    forms ``withWatermark`` accepts."""
+    """Seconds in an "N unit" duration string — single (``"30 minutes"``,
+    ``"5 s"``) or compound (``"1 hour 30 minutes"``): the forms
+    ``withWatermark`` accepts plus the short units ``s``/``sec``/``m``/
+    ``min``/``h``/``d`` that ``Pattern.within`` takes."""
     import re
 
-    unit_re = r"(\d+(?:\.\d+)?)\s*(millisecond|second|minute|hour|day|week)s?"
-    parts = re.findall(unit_re, delay.lower())
+    text = delay.lower()
+    parts = re.findall(_INTERVAL_PART, text)
     # strict: every token must belong to a (number, unit) pair — reject
     # "3 fortnights" loudly instead of silently dropping it
-    if not parts or re.sub(unit_re, "", delay.lower()).strip():
+    if (
+        not parts
+        or re.sub(_INTERVAL_PART, "", text).strip()
+        or any(u not in _INTERVAL_UNIT_S for _n, u in parts)
+    ):
         raise ValueError(f"unparseable interval string: {delay!r}")
     return sum(float(n) * _INTERVAL_UNIT_S[u] for n, u in parts)
 
@@ -257,7 +242,7 @@ def event_time_bounded_agg(
     peer-inclusive at the current timestamp, matching SQL RANGE
     semantics) must be given.
 
-    State per key = two Arrow-IPC blobs: the pending buffer (rows the
+    State per key = two frames: the pending buffer (rows the
     watermark hasn't passed) and the RETAINED HISTORY — the reference's
     expiring-state trick: only the last ``preceding_rows`` rows (ROWS)
     or rows within ``preceding_seconds`` of the watermark (RANGE) stay,
@@ -323,137 +308,86 @@ def event_time_bounded_agg(
     )
     buf_cols = [time_col, *tb, value_col]
 
-    def fn(key_tuple, batches, state: GroupState):
-        if state.exists:
-            hist_blob, pend_blob, emitted = state.get
-            hist = arrow_state.de(bytes(hist_blob), buf_cols)
-            parts = [arrow_state.de(bytes(pend_blob), buf_cols)]
-        else:
-            hist, parts, emitted = arrow_state.concat([], buf_cols), [], 0
-        parts += [pdf[buf_cols] for pdf in batches]
-        pend = arrow_state.concat(parts, buf_cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
+    def step(key_tuple, frames, batch, wm_ms, timed_out):
+        hist = frames["hist"]
+        emitted = int(frames["emitted"]["emitted"][0]) if len(frames["emitted"]) else 0
+        pend = arrow_state.concat([frames["pend"], batch[buf_cols]], buf_cols)
+        wm = wm_ms / 1000.0
         # nothing buffered and nothing arrived => this firing can only
         # be an idle-cleanup timer (the emit timer is armed only when
         # pending rows exist)
-        pure_cleanup = state.hasTimedOut and not len(pend)
+        pure_cleanup = timed_out and not len(pend)
 
-        keep = pend
+        ready, keep, timer_ms = arrow_state.release(pend, time_col, [time_col, *tb], wm_ms)
         out = None
-        if len(pend):
-            pend = pend.sort_values([time_col, *tb], kind="stable", ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
+        if len(ready):
+            # history rows all precede ready rows in event time
+            # (they were emitted behind an earlier watermark) —
+            # plain concat preserves the per-key event-time order
+            comb = arrow_state.concat([hist, ready], buf_cols)
+            vals = comb[value_col].astype(float).to_numpy()
+            nh = len(hist)
+            nr = len(ready)
+            if preceding_rows is not None:
+                n = preceding_rows + 1  # frame size incl. current
+                roll = pd.Series(vals).rolling(n, min_periods=1).sum().to_numpy()
+                w_sum = roll[nh:]
+                # logical position counts rows PRUNED from history
+                pos = emitted + np.arange(1, nr + 1, dtype="int64")
+                w_cnt = np.minimum(pos, n)
+            else:
+                ts_all = arrow_state.epoch_us(comb[time_col])
+                cs = np.concatenate([[0.0], np.cumsum(vals)])
+                t_ready = ts_all[nh:]
+                lo = np.searchsorted(
+                    ts_all, t_ready - int(preceding_seconds * 1e6), side="left"
+                )
+                # peer-inclusive upper bound (SQL RANGE CURRENT ROW)
+                hi = np.searchsorted(ts_all, t_ready, side="right")
+                w_sum = cs[hi] - cs[lo]
+                w_cnt = (hi - lo).astype("int64")
+            out = pd.DataFrame(
+                {
+                    key: key_tuple[0],
+                    time_col: ready[time_col].to_numpy(),
+                    **{t: ready[t].to_numpy() for t in tb},
+                    value_col: ready[value_col].astype(float).to_numpy(),
+                    "w_sum": w_sum,
+                    "w_cnt": w_cnt,
+                }
             )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
-            if len(ready):
-                # history rows all precede ready rows in event time
-                # (they were emitted behind an earlier watermark) —
-                # plain concat preserves the per-key event-time order
-                comb = arrow_state.concat(
-                    [hist, ready.reset_index(drop=True)], buf_cols
-                )
-                vals = comb[value_col].astype(float).to_numpy()
-                nh = len(hist)
-                nr = len(ready)
-                if preceding_rows is not None:
-                    n = preceding_rows + 1  # frame size incl. current
-                    roll = (
-                        pd.Series(vals).rolling(n, min_periods=1).sum().to_numpy()
-                    )
-                    w_sum = roll[nh:]
-                    # logical position counts rows PRUNED from history
-                    pos = emitted + np.arange(1, nr + 1, dtype="int64")
-                    w_cnt = np.minimum(pos, n)
-                else:
-                    ts_all = (
-                        comb[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-                    )
-                    cs = np.concatenate([[0.0], np.cumsum(vals)])
-                    t_ready = ts_all[nh:]
-                    lo = np.searchsorted(
-                        ts_all, t_ready - int(preceding_seconds * 1e6), side="left"
-                    )
-                    # peer-inclusive upper bound (SQL RANGE CURRENT ROW)
-                    hi = np.searchsorted(ts_all, t_ready, side="right")
-                    w_sum = cs[hi] - cs[lo]
-                    w_cnt = (hi - lo).astype("int64")
-                out = pd.DataFrame(
-                    {
-                        key: key_tuple[0],
-                        time_col: ready[time_col].to_numpy(),
-                        **{t: ready[t].to_numpy() for t in tb},
-                        value_col: ready[value_col].astype(float).to_numpy(),
-                        "w_sum": w_sum,
-                        "w_cnt": w_cnt,
-                    }
-                )
-                emitted += nr
-                # retain exactly the frame-reachable tail
-                if preceding_rows is not None:
-                    hist = comb.iloc[len(comb) - min(len(comb), preceding_rows):]
-                else:
-                    ts_all_us = (
-                        comb[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-                    )
-                    cut = int((wm - preceding_seconds) * 1e6)
-                    hist = comb[ts_all_us > cut]
+            emitted += nr
+            # retain exactly the frame-reachable tail (RANGE: pruned below)
+            hist = comb
+            if preceding_rows is not None:
+                hist = comb.iloc[len(comb) - min(len(comb), preceding_rows):]
 
         # idle-state cleanup: RANGE history older than wm - preceding
         # can never reach a future frame (future rows have ts > wm) —
         # prune it even on timeout-only firings with no ready rows
         if preceding_seconds is not None and len(hist):
-            ts_h = (
-                hist[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-            )
-            hist = hist[ts_h > int((wm - preceding_seconds) * 1e6)]
+            hist = hist[arrow_state.epoch_us(hist[time_col]) > int((wm - preceding_seconds) * 1e6)]
         rows_idle_drop = (
             preceding_rows is not None
             and idle_retention_seconds is not None
             and pure_cleanup
         )
         if (not len(keep) and not len(hist)) or rows_idle_drop:
-            if state.exists:
-                state.remove()
-            if out is not None:
-                yield out
-            return
-        state.update(
-            (
-                arrow_state.ser(hist.reset_index(drop=True)),
-                arrow_state.ser(keep.reset_index(drop=True)),
-                int(emitted),
-            )
-        )
-        wm_ms = state.getCurrentWatermarkMs()
-        if len(keep):
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
-            )
-            state.setTimeoutTimestamp(max(int(earliest) + 1, wm_ms + 1))
-        elif preceding_seconds is not None:
+            # the key holds nothing a future row can reach: drop its state
+            return {"hist": hist[:0], "pend": keep, "emitted": pd.DataFrame()}, out, None
+        if timer_ms is None and preceding_seconds is not None:
             # RANGE: fire exactly when the retained tail goes dead
-            hmax_ms = (
-                hist[time_col].astype("datetime64[us]").astype("int64").max() / 1e3
-            )
-            state.setTimeoutTimestamp(
-                max(int(hmax_ms + preceding_seconds * 1e3) + 1, wm_ms + 1)
-            )
-        elif idle_retention_seconds is not None:
+            hmax_ms = arrow_state.epoch_us(hist[time_col]).max() / 1e3
+            timer_ms = int(hmax_ms + preceding_seconds * 1e3) + 1
+        elif timer_ms is None and idle_retention_seconds is not None:
             # ROWS + configured retention: drop the key after idling
-            state.setTimeoutTimestamp(
-                wm_ms + int(idle_retention_seconds * 1e3) + 1
-            )
-        if out is not None:
-            yield out
+            timer_ms = wm_ms + int(idle_retention_seconds * 1e3) + 1
+        frames = {"hist": hist, "pend": keep, "emitted": pd.DataFrame({"emitted": [emitted]})}
+        return frames, out, timer_ms
 
-    return src.groupBy(key).applyInPandasWithState(
-        fn,
-        out_schema,
-        "hist binary, pend binary, emitted long",
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return arrow_state.run(
+        src.groupBy(key), step, out_schema,
+        state=(("hist", buf_cols), ("pend", buf_cols), ("emitted", ["emitted"])),
     )
 
 
@@ -474,9 +408,9 @@ def event_time_sorted_emit(
     streaming SQL ORDER BY ts requires); with a key, rows are ordered
     per key but parallel across keys.  Output schema = input schema.
 
-    Scale notes: the buffer rides as an Arrow-IPC blob of the full row
-    schema (typed, no pickle); per batch the work is one stable sort
-    plus a boolean watermark split — no per-row Python.
+    Scale notes: the buffer holds the full row schema; per batch the
+    work is one stable sort plus a boolean watermark split — no per-row
+    Python.
     """
     from flink_1_8_sourcecode_spark.streaming import arrow_state
 
@@ -490,37 +424,14 @@ def event_time_sorted_emit(
     cols = df.columns
     out_schema = ", ".join(f"{c} {src.schema[c].dataType.simpleString()}" for c in cols)
 
-    def fn(key_tuple, batches, state: GroupState):
-        parts = [arrow_state.de(bytes(state.get[0]), cols)] if state.exists else []
-        parts += [pdf[cols] for pdf in batches]
-        pend = arrow_state.concat(parts, cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
+    order = [time_col, *([tiebreak] if tiebreak else [])]
 
-        ready, keep = None, pend
-        if len(pend):
-            sort_cols = [time_col, *( [tiebreak] if tiebreak else [] )]
-            pend = pend.sort_values(sort_cols, kind="stable", ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-            )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
+    def step(_key, frames, batch, wm_ms, _timed_out):
+        pend = arrow_state.concat([frames["buf"], batch[cols]], cols)
+        ready, keep, timer_ms = arrow_state.release(pend, time_col, order, wm_ms)
+        return {"buf": keep}, ready, timer_ms
 
-        state.update((arrow_state.ser(keep.reset_index(drop=True)),))
-        if len(keep):
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
-            )
-            state.setTimeoutTimestamp(
-                max(int(earliest) + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if ready is not None and len(ready):
-            yield ready
-
-    grouped = src.groupBy(*group)
-    return grouped.applyInPandasWithState(
-        fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return arrow_state.run(src.groupBy(*group), step, out_schema, state=(("buf", cols),))
 
 
 def streaming_heavy_hitters(
@@ -735,7 +646,7 @@ def streaming_rate_limit(
     batch operator's on the same data — the property that makes
     backfills reproduce the online throttle.
 
-    State per key = two Arrow frames: the pending buffer and one
+    State per key = two frames: the pending buffer and one
     (bucket, admitted) counter row per OPEN bucket — buckets the
     watermark has closed are pruned, so state is bounded by
     disorder/window, never the stream.  Per batch: one stable sort, a
@@ -756,86 +667,43 @@ def streaming_rate_limit(
     ) + ", window_start long"
     cnt_cols = ["bucket", "admitted"]
 
-    def fn(key_tuple, batches, state: GroupState):
-        if state.exists:
-            pend_blob, cnt_blob = state.get
-            pend_parts = [arrow_state.de(bytes(pend_blob), cols)]
-            cnts = arrow_state.de(bytes(cnt_blob), cnt_cols)
-        else:
-            pend_parts, cnts = [], pd.DataFrame(columns=cnt_cols)
-        pend_parts += [pdf[cols] for pdf in batches]
-        pend = arrow_state.concat(pend_parts, cols)
-        wm = state.getCurrentWatermarkMs() / 1000.0
-
-        keep = pend
-        out = None
+    def step(_key, frames, batch, wm_ms, _timed_out):
+        cnts = frames["cnts"]
         counts = {int(b): int(c) for b, c in zip(cnts["bucket"], cnts["admitted"])}
-        if len(pend):
-            pend = pend.sort_values([time_col, id_col], kind="stable",
-                                    ignore_index=True)
-            tsec = (
-                pend[time_col].astype("datetime64[us]").astype("int64").to_numpy()
-                / 1e6
-            )
-            ready_mask = tsec <= wm
-            ready, keep = pend[ready_mask], pend[~ready_mask]
-            if len(ready):
-                bkt = (
-                    (tsec[ready_mask] // window_seconds).astype("int64")
-                    * window_seconds
-                )
-                prior = np.array([counts.get(int(b), 0) for b in bkt])
-                within = pd.Series(1, index=range(len(bkt))).groupby(
-                    bkt, sort=False
-                ).cumsum().to_numpy() - 1
-                rank = prior + within
-                admit = rank < k
-                if admit.any():
-                    out = ready[admit].copy()
-                    out["window_start"] = bkt[admit]
-                # roll the admitted totals into the bucket counters
-                for b in np.unique(bkt):
-                    m = bkt == b
-                    counts[int(b)] = min(
-                        k, counts.get(int(b), 0) + int(m.sum())
-                    )
+        pend = arrow_state.concat([frames["pend"], batch[cols]], cols)
+        ready, keep, timer_ms = arrow_state.release(pend, time_col, [time_col, id_col], wm_ms)
+        out = None
+        if len(ready):
+            tsec = arrow_state.epoch_us(ready[time_col]) / 1e6
+            bkt = (tsec // window_seconds).astype("int64") * window_seconds
+            prior = np.array([counts.get(int(b), 0) for b in bkt])
+            within = pd.Series(1, index=range(len(bkt))).groupby(
+                bkt, sort=False
+            ).cumsum().to_numpy() - 1
+            rank = prior + within
+            admit = rank < k
+            if admit.any():
+                out = ready[admit].copy()
+                out["window_start"] = bkt[admit]
+            # roll the admitted totals into the bucket counters
+            for b in np.unique(bkt):
+                m = bkt == b
+                counts[int(b)] = min(k, counts.get(int(b), 0) + int(m.sum()))
         # prune buckets the watermark has closed (no row of that bucket
         # can still arrive: its latest time < bucket end <= wm)
-        counts = {
-            b: c for b, c in counts.items() if b + window_seconds > wm
-        }
+        counts = {b: c for b, c in counts.items() if b + window_seconds > wm_ms / 1000.0}
         # idle-key cleanup (reference: cleanup timers on keyed state):
-        # with nothing pending and no open bucket, the key holds no
-        # information — drop it; with open buckets but no pending rows,
-        # fire exactly when the last open bucket closes so the counters
-        # get pruned and the state removed, instead of living forever
-        if not len(keep) and not counts:
-            if state.exists:
-                state.remove()
-            if out is not None and len(out):
-                yield out
-            return
-        state.update(
-            (
-                arrow_state.ser(keep.reset_index(drop=True)),
-                arrow_state.ser(pd.DataFrame(sorted(counts.items()), columns=cnt_cols)),
-            )
-        )
-        wm_ms = state.getCurrentWatermarkMs()
-        if len(keep):
-            earliest = (
-                keep[time_col].astype("datetime64[us]").astype("int64").min() / 1e3
-            )
-            state.setTimeoutTimestamp(max(int(earliest) + 1, wm_ms + 1))
-        else:
-            last_close = max(b + window_seconds for b in counts)
-            state.setTimeoutTimestamp(max(int(last_close * 1e3) + 1, wm_ms + 1))
-        if out is not None and len(out):
-            yield out
+        # with nothing pending and no open bucket the key holds no
+        # information and its state is dropped; with open buckets but no
+        # pending rows, fire when the last open bucket closes so the
+        # counters get pruned instead of living forever
+        if timer_ms is None and counts:
+            timer_ms = int((max(counts) + window_seconds) * 1e3) + 1
+        cnts = pd.DataFrame(sorted(counts.items()), columns=cnt_cols)
+        return {"pend": keep, "cnts": cnts}, out, timer_ms
 
-    return src.groupBy(key).applyInPandasWithState(
-        fn, out_schema, "pend binary, cnts binary", "append",
-        GroupStateTimeout.EventTimeTimeout,
+    return arrow_state.run(
+        src.groupBy(key), step, out_schema, state=(("pend", cols), ("cnts", cnt_cols)),
     )
 
 

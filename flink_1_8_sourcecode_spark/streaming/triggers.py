@@ -4,7 +4,7 @@ ContinuousEventTimeTrigger.java, DeltaTrigger.java, PurgingTrigger.java).
 
 Structured Streaming's windowed aggregation fires once per micro-batch
 with no user trigger hook, so custom triggers run in the stateful layer
-(applyInPandasWithState): per key, open tumbling windows live in state;
+(``arrow_state.run``): per key, open tumbling windows live in state;
 trigger conditions emit EARLY partial rows (is_final=false); the global
 watermark passing a window's end emits the final row (is_final=true)
 and purges — the classic assign -> state -> trigger -> emit loop of
@@ -13,16 +13,9 @@ that receive no further data, exactly like Flink's event-time timers.
 
 Scale notes:
 
-- **Key groups.** The stateful shuffle is on ``arrow_state.key_group``
-  (Flink's KeyGroupRangeAssignment design): one applyInPandasWithState
-  invocation per key group per micro-batch, with the per-(key, window)
-  accumulators of all the group's keys inside the group's state.  This
-  amortizes the per-invocation JVM<->Python protocol cost over all keys
-  of the group — at high key cardinality the per-key-invocation
-  alternative is the scale-killer, not the arithmetic.
-- **State.** Per key group, one Arrow frame of (key, w_start, cnt,
-  total, cursor) open-window accumulators, the key in its own Spark
-  type (``arrow_state.ser``/``de``), never buffered rows.
+- **State.** ``triggered_tumble_agg`` is a per-key-group step driven by
+  ``arrow_state.run``; its state is one frame of (key, w_start, cnt,
+  total, cursor) open-window accumulators, never buffered rows.
 - **Vectorization.** Per-batch work is numpy: count-trigger firings
   fall out of modular arithmetic on cumulative counts,
   continuous-trigger firings out of boundary crossings, and emitted
@@ -36,12 +29,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flink_1_8_sourcecode_spark.streaming import arrow_state
 
@@ -199,16 +189,15 @@ def triggered_tumble_agg(
     )
     st_cols = ["k", "w", "cnt", "total", "cursor"]
 
-    def fn(_kg, batches: Iterator[pd.DataFrame], state: GroupState):
+    def step(_kg, frames, batch, wm_ms, _timed_out):
         # wins: (key, ws) -> [cnt, total, cursor]; cursor NaN = DeltaTrigger's
-        # empty ValueState.  State rides as an Arrow frame, one row per
-        # open (key, window).
-        wins: dict[tuple, list] = {}
-        if state.exists:
-            st = arrow_state.de(bytes(state.get[0]), st_cols)
-            for u, w, c, t, cu in zip(*(st[col].tolist() for col in st_cols)):
-                wins[(u, w)] = [c, t, cu]
-        wm = state.getCurrentWatermarkMs() / 1000.0  # global event-time watermark
+        # empty ValueState.  State is one row per open (key, window).
+        st = frames["buf"]
+        wins: dict[tuple, list] = {
+            (u, w): [c, t, cu]
+            for u, w, c, t, cu in zip(*(st[col].tolist() for col in st_cols))
+        }
+        wm = wm_ms / 1000.0  # global event-time watermark
         out_u: list = []
         out_ws: list[float] = []
         out_cnt: list[int] = []
@@ -222,20 +211,11 @@ def triggered_tumble_agg(
             out_total.append(float(total))
             out_final.append(final)
 
-        key_parts, ts_parts, val_parts = [], [], []
-        for pdf in batches:
-            ts_parts.append(
-                pdf[time_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-            )
-            val_parts.append(pdf[value_col].astype(float).to_numpy())
-            key_parts.append(pdf[key_name])
-        ts = np.concatenate(ts_parts) if ts_parts else np.empty(0)
+        ts = arrow_state.epoch_us(batch[time_col]) / 1e6
         if len(ts):
-            vals = np.concatenate(val_parts)
+            vals = batch[value_col].astype(float).to_numpy()
             # keys as dense codes for the numpy work, values by code
-            us, uniq = pd.factorize(
-                pd.concat(key_parts, ignore_index=True), use_na_sentinel=False
-            )
+            us, uniq = pd.factorize(batch[key_name], use_na_sentinel=False)
             kvals = uniq.tolist()
             ws_all = ts - np.mod(ts, window_seconds)
             live = ws_all + window_seconds > wm  # behind-watermark rows dropped
@@ -288,25 +268,20 @@ def triggered_tumble_agg(
                 emit(u, w, acc[0], acc[1], final=True)
                 del wins[(u, w)]
 
-        if wins:
-            st_new = pd.DataFrame(
-                [(u, w, *a) for (u, w), a in wins.items()], columns=st_cols
-            )
-            state.update((arrow_state.ser(st_new),))
-            # event-time timer at the earliest pending deadline (next
-            # window end or continuous boundary), like Flink's
-            # registerEventTimeTimer — must sit beyond the watermark
-            deadlines = [w + window_seconds for (_u, w) in wins]
-            if kind == "continuous":
-                deadlines += [a[2] for a in wins.values()]
-            target_ms = int(min(deadlines) * 1000)
-            state.setTimeoutTimestamp(max(target_ms, int(wm * 1000) + 1))
-        elif state.exists:
-            # no open windows: drop the group's state entry entirely so
-            # state stays bounded by ACTIVE keys, not all keys ever seen
-            state.remove()
+        # event-time timer at the earliest pending deadline (next window
+        # end or continuous boundary), like Flink's registerEventTimeTimer;
+        # a group with no open window drops its state, so state stays
+        # bounded by ACTIVE keys, not all keys ever seen
+        deadlines = [w + window_seconds for (_u, w) in wins]
+        if kind == "continuous":
+            deadlines += [a[2] for a in wins.values()]
+        timer_ms = int(min(deadlines) * 1000) if deadlines else None
+        st_new = pd.DataFrame(
+            [(u, w, *a) for (u, w), a in wins.items()], columns=st_cols
+        )
+        out = None
         if out_ws:
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     key_name: out_u,
                     "w_start": pd.to_datetime(np.array(out_ws), unit="s"),
@@ -315,12 +290,11 @@ def triggered_tumble_agg(
                     "is_final": np.array(out_final, dtype="bool"),
                 }
             )
+        return {"buf": st_new}, out, timer_ms
 
     grouped = (
         df.withWatermark(time_col, watermark_delay)
         .withColumn("__kg", arrow_state.key_group(key))
         .groupBy("__kg")
     )
-    return grouped.applyInPandasWithState(
-        fn, out_schema, "buf binary", "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return arrow_state.run(grouped, step, out_schema, state=(("buf", st_cols),))

@@ -278,10 +278,22 @@ def test_interval_seconds_parser():
     assert stateful._interval_seconds("1 day") == 86400.0
     assert stateful._interval_seconds("500 milliseconds") == 0.5
     assert stateful._interval_seconds("2 weeks") == 2 * 604800.0
+    # the short spellings Pattern.within takes
+    assert stateful._interval_seconds("5 s") == 5.0
+    assert stateful._interval_seconds("3 sec") == 3.0
+    assert stateful._interval_seconds("2 m") == 120.0
+    assert stateful._interval_seconds("4 min") == 240.0
+    assert stateful._interval_seconds("1 h") == 3600.0
+    assert stateful._interval_seconds("2 d") == 172800.0
+    from flink_1_8_sourcecode_spark.cep.pattern import Pattern
+
+    assert Pattern.begin("a").within("90 sec").within_seconds == 90.0
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="unparseable"):
         stateful._interval_seconds("3 fortnights")
+    with _pytest.raises(ValueError, match="unparseable"):
+        stateful._interval_seconds("5 ms")
 
 
 def test_bounded_rows_idle_state_retention(spark, tmp_path):

@@ -345,3 +345,164 @@ def test_corrupt_offsets_fail_the_restart(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
+
+
+def test_late_side_channel_replay_routes_as_first_run(spark, tmp_path):
+    """A micro-batch that Spark re-runs after a crash before its commit
+    routes exactly as it did the first time: the replay must not see the
+    watermark that the batch itself advanced."""
+    src_dir = tmp_path / "src"
+    ckpt = tmp_path / "ckpt"
+    base = dt.datetime(2024, 1, 1)
+    schema = "event_id long, ts timestamp, value double"
+    for f, minutes in enumerate([range(0, 30), range(30, 60)]):
+        rows = [(m, base + dt.timedelta(minutes=m), 1.0) for m in minutes]
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src_dir}/f={f}")
+
+    def run(routes):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(str(src_dir))
+        )
+
+        def record(channel):
+            return lambda df, b: routes.append(
+                (b, channel, sorted(r.event_id for r in df.collect()))
+            )
+
+        q = side_outputs.late_data_side_channel(
+            stream, "ts", "10 minutes", main_fn=record("main"),
+            late_fn=record("late"), checkpoint=str(ckpt),
+        ).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    first: list = []
+    run(first)
+    assert [b for b, _c, _ids in first] == [0, 0, 1, 1]
+    # crash between routing batch 1 and writing its commit
+    (ckpt / "commits" / "1").unlink()
+    (ckpt / "commits" / ".1.crc").unlink()
+    replay: list = []
+    run(replay)
+    assert replay == [r for r in first if r[0] == 1]
+    assert replay == [(1, "late", []), (1, "main", list(range(30, 60)))]
+
+
+def test_corrupt_late_watermark_fails_the_restart(spark, tmp_path):
+    """A watermark file that cannot be read fails the restart instead of
+    silently starting cold (late rows would route to main once)."""
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "_late_wm.json").write_text("{not json")
+    (tmp_path / "src").mkdir()
+    stream = spark.readStream.schema("ts timestamp").parquet(str(tmp_path / "src"))
+    with pytest.raises(ValueError, match="_late_wm.json"):
+        side_outputs.late_data_side_channel(
+            stream, "ts", "10 minutes", main_fn=lambda df, b: None,
+            late_fn=lambda df, b: None, checkpoint=str(ckpt),
+        )
+
+
+# Restart matrix: each operator's output, stopped after the first
+# chunks and restarted from its checkpoint, equals one uninterrupted run.
+_RESTART_SCHEMA = "k long, side string, ts timestamp, v double"
+_RESTART_T0 = dt.datetime(2024, 1, 1)
+
+
+def _restart_chunks():
+    """Four small chunks over three keys, then a far-future sentinel
+    whose watermark closes every window and flushes every idle key."""
+    def t(minutes):
+        return _RESTART_T0 + dt.timedelta(minutes=minutes)
+
+    chunks = []
+    for c in range(4):
+        chunks.append([
+            (k, "l" if (i + k) % 2 else "r", t(25 * c + 7 * i + k), float(10 * c + i + k))
+            for k in range(3) for i in range(3)
+        ])
+    chunks.append([(99, "l", t(60 * 24 * 30), 0.0), (99, "r", t(60 * 24 * 30), 0.0)])
+    return chunks
+
+
+def _restart_operator(name):
+    from flink_1_8_sourcecode_spark.operators.joins import unbounded_stream_join
+    from flink_1_8_sourcecode_spark.streaming.evictors import evicted_tumble_agg
+    from flink_1_8_sourcecode_spark.streaming.triggers import triggered_tumble_agg
+
+    if name == "trigger":
+        return lambda s: triggered_tumble_agg(
+            s, key="k", time_col="ts", value_col="v", window_seconds=3600.0,
+            trigger=("count", 2), watermark_delay="30 minutes",
+        )
+    if name == "evictor":
+        return lambda s: evicted_tumble_agg(
+            s, key="k", time_col="ts", value_col="v", window_seconds=3600.0,
+            evictor=("count", 2), watermark_delay="30 minutes",
+        )
+
+    def side(s, tag):
+        return s.filter(F.col("side") == tag).select(
+            "k", F.col("ts").alias(f"{tag}ts"), F.col("v").alias(f"{tag}v")
+        )
+
+    return lambda s: unbounded_stream_join(
+        side(s, "l"), side(s, "r"),
+        on="k", how="full", left_time="lts", right_time="rts",
+        watermark_delay="30 minutes", idle_state_ttl_seconds=1800.0,
+    )
+
+
+@pytest.mark.parametrize("operator", ["trigger", "evictor", "outer_join"])
+def test_stateful_operator_restart_equals_uninterrupted_run(spark, tmp_path, operator):
+    import os
+
+    chunks = _restart_chunks()
+    build = _restart_operator(operator)
+
+    def run(tag, stop_after):
+        src, out, ckpt = (str(tmp_path / f"{tag}_{p}") for p in ("src", "out", "ckpt"))
+
+        def write(i):
+            d = f"{src}/c={i:02d}"
+            spark.createDataFrame(chunks[i], _RESTART_SCHEMA).coalesce(1).write.parquet(d)
+            # the file source orders files by modification time
+            for dp, _dn, fns in os.walk(d):
+                for fn in fns:
+                    os.utime(os.path.join(dp, fn), (1e9 + 10 * i, 1e9 + 10 * i))
+
+        def drain():
+            stream = (
+                spark.readStream.schema(_RESTART_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .option("recursiveFileLookup", "true")
+                .parquet(src)
+            )
+            q = (
+                build(stream).writeStream.format("parquet").option("path", out)
+                .option("checkpointLocation", ckpt).outputMode("append").start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+
+        for i in range(stop_after):
+            write(i)
+        drain()
+        if stop_after < len(chunks):
+            for i in range(stop_after, len(chunks)):
+                write(i)
+            drain()
+        got = spark.read.parquet(out).toPandas()
+        got = got[got.k != 99].astype(str)
+        return sorted(map(tuple, got[sorted(got.columns)].itertuples(index=False)))
+
+    straight = run("straight", len(chunks))
+    assert straight
+    assert run("restart", 2) == straight
