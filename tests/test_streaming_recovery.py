@@ -433,6 +433,7 @@ def _restart_chunks():
 def _restart_operator(name):
     from flink_1_8_sourcecode_spark.operators.joins import unbounded_stream_join
     from flink_1_8_sourcecode_spark.streaming.evictors import evicted_tumble_agg
+    from flink_1_8_sourcecode_spark.streaming.stateful import count_window_agg
     from flink_1_8_sourcecode_spark.streaming.triggers import triggered_tumble_agg
 
     if name == "trigger":
@@ -445,6 +446,10 @@ def _restart_operator(name):
             s, key="k", time_col="ts", value_col="v", window_seconds=3600.0,
             evictor=("count", 2), watermark_delay="30 minutes",
         )
+    if name == "count_window":
+        return lambda s: count_window_agg(s, key="k", value_col="v", window_size=2)
+    if name == "dedup":
+        return lambda s: windows.streaming_dedup(s, ["k", "side"], "ts", "30 minutes")
 
     def side(s, tag):
         return s.filter(F.col("side") == tag).select(
@@ -458,7 +463,9 @@ def _restart_operator(name):
     )
 
 
-@pytest.mark.parametrize("operator", ["trigger", "evictor", "outer_join"])
+@pytest.mark.parametrize(
+    "operator", ["trigger", "evictor", "outer_join", "count_window", "dedup"]
+)
 def test_stateful_operator_restart_equals_uninterrupted_run(spark, tmp_path, operator):
     import os
 

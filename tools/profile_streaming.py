@@ -4,8 +4,10 @@
 Monkey-patches DataStreamWriter.start to capture every StreamingQuery the
 query function launches, then dumps recentProgress durationMs /
 stateOperators metrics (commit, all-updates and all-removals time) after
-the run.  ``--cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else the host's
-core count, the same ``local[N]`` the tests and the benchmark use.
+the run, and each micro-batch's Janino compiles (generated-class cache
+misses, CodegenMetrics; see ``BatchCompiles``).  ``--cpus`` defaults to
+``$SPARK_GRAFT_CPUS``, else the host's core count, the same ``local[N]``
+the tests and the benchmark use.
 
 Usage: python tools/profile_streaming.py <query_name> [--sf DIR] [--cpus N]
 """
@@ -20,7 +22,38 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
+
 from flink_1_8_sourcecode_spark.queries import load_all  # noqa: E402
+
+
+class BatchCompiles(StreamingQueryListener):
+    """Janino compiles per micro-batch.  The JVM-wide compile count is read
+    as each batch's progress event arrives; a batch's compiles are the
+    count then minus the count at the query's previous batch (or its
+    start).  Progress events arrive asynchronously, so a compile made while
+    planning the next batch can land on the batch before it."""
+
+    def __init__(self, spark):
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        self.count = metrics.METRIC_COMPILATION_TIME()
+        self.last: dict[str, int] = {}
+        self.per_batch: dict[tuple[str, int], int] = {}
+
+    def onQueryStarted(self, event):
+        self.last[str(event.id)] = self.count.getCount()
+
+    def onQueryProgress(self, event):
+        p, now = event.progress, self.count.getCount()
+        qid = str(p.id)
+        self.per_batch[(qid, p.batchId)] = now - self.last.get(qid, now)
+        self.last[qid] = now
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
 
 
 def main() -> None:
@@ -39,6 +72,8 @@ def main() -> None:
     q = reg[args.name]
     spark = get_spark(app_name=f"profile-{args.name}")
     spark.sparkContext.setLogLevel("ERROR")
+    compiles = BatchCompiles(spark)
+    spark.streams.addListener(compiles)
 
     from pyspark.sql.streaming import readwriter as srw
 
@@ -58,6 +93,7 @@ def main() -> None:
         wall = time.perf_counter() - t0
     finally:
         srw.DataStreamWriter.start = orig_start
+    time.sleep(1.0)  # let the listener receive the last progress events
 
     print(f"\n=== {args.name}: wall {wall:.2f}s, {len(captured)} streaming queries ===")
     for sq in captured:
@@ -83,7 +119,8 @@ def main() -> None:
                 f"latestOffset={d.get('latestOffset')}ms "
                 f"queryPlanning={d.get('queryPlanning')}ms "
                 f"walCommit={d.get('walCommit')}ms "
-                f"commitOffsets={d.get('commitOffsets')}ms | {st}"
+                f"commitOffsets={d.get('commitOffsets')}ms "
+                f"compiles={compiles.per_batch.get((str(p.get('id')), p.get('batchId')))} | {st}"
             )
 
 

@@ -67,15 +67,10 @@ def main() -> int:
         print("unknown queries:", unknown, file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession
+    from flink_1_8_sourcecode_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    # the engine's own session (UTC, its confs and its session extension)
+    spark = get_spark(app_name="verify-subset", master=f"local[{args.cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
